@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import txnlog
+
 __all__ = [
     "linear_probe_sums",
     "fit_linear_probe_ppm",
@@ -532,12 +534,12 @@ def make_streaming_probe_maintainer(
     fold has NO partial side effects — the sums are one atomic value):
     each micro-batch runs ONE (grouped) aggregate, folds +insert /
     -delete into a CANDIDATE dict, atomically replaces
-    ``<path>/probe_txn.json`` = {last_batch_id, sums} (tmp +
-    ``os.replace``, the index log's writer), and only then updates the
-    in-memory state.  Crash before the replace → the engine replays
-    the batch against the PREVIOUS sums (the in-memory fold died with
-    the process; a same-process task retry recomputes from the
-    un-updated state).  Crash after → the replay's batch id is at or
+    ``<path>/probe_txn.json`` = {last_batch_id, sums}
+    (:func:`txnlog.replay_guarded_fold` — INDEX COMMIT PROTOCOL in
+    :mod:`.txnlog`), and only then updates the in-memory state.  Crash
+    before the replace → the engine replays the batch against the
+    PREVIOUS sums (the in-memory fold died with the process; a
+    same-process task retry recomputes from the un-updated state).  Crash after → the replay's batch id is at or
     below the committed high-water mark and skips as a visible no-op.
     Both windows land on the same committed record, so a restarted
     fold's final fit is BIT-IDENTICAL to an uninterrupted one (pytest:
@@ -552,29 +554,9 @@ def make_streaming_probe_maintainer(
     ``op_col`` if set) so featurization stays inside the per-batch
     pass.  Scale shape: d² longs per batch cross the wire, the JSON
     record is d² integers, no state store, no corpus rescan."""
-    from .similarity import _read_index_json, _write_index_json_atomic
-
     d = len(x_cols)
-    committed = _read_index_json(path, "probe_txn.json")
-    state = {
-        "last_batch_id": (
-            int(committed["last_batch_id"]) if committed is not None else -1
-        ),
-        "sums": (
-            {k: int(v) for k, v in committed["sums"].items()}
-            if committed is not None
-            else merge_moment_sums([], d)
-        ),
-        "log": [],
-    }
 
-    def fold(batch_df, batch_id) -> None:
-        b = int(batch_id)
-        if b <= state["last_batch_id"]:
-            # engine replay of a committed batch (crash landed between
-            # the record replace and the engine checkpoint): skip
-            state["log"].append({"batch_id": b, "skipped_replay": True})
-            return
+    def step(batch_df, sums: dict) -> dict:
         df = prepare(batch_df) if prepare is not None else batch_df
         if op_col is None:
             tagged = [
@@ -591,24 +573,22 @@ def make_streaming_probe_maintainer(
                     f"got {sorted(map(str, ops))}"
                 )
             tagged = [(r[op_col], r.asDict()) for r in rows]
-        new_sums = dict(state["sums"])
         for op, r in tagged:
             if op == "I":
-                new_sums = merge_moment_sums([new_sums, r], d)
+                sums = merge_moment_sums([sums, r], d)
             else:
-                new_sums = subtract_moment_sums(new_sums, r, d)
-        # COMMIT before the in-memory update: a crash here replays the
-        # batch against the previous in-memory/committed sums; a crash
-        # between these two lines is healed by the restart re-seed
-        # (the record is authoritative, the dict is a cache)
-        _write_index_json_atomic(
-            path, "probe_txn.json", {"last_batch_id": b, "sums": new_sums}
-        )
-        state["sums"] = new_sums
-        state["last_batch_id"] = b
-        state["log"].append({"batch_id": b, "skipped_replay": False})
+                sums = subtract_moment_sums(sums, r, d)
+        return sums
 
-    return fold, state
+    return txnlog.replay_guarded_fold(
+        path,
+        txnlog.PROBE,
+        "sums",
+        empty=merge_moment_sums([], d),
+        decode=lambda sums: {k: int(v) for k, v in sums.items()},
+        encode=lambda sums: sums,
+        step=step,
+    )
 
 
 def fit_grouped_probes_ppm(
@@ -760,27 +740,8 @@ def make_streaming_isotonic_maintainer(
     :func:`isotonic_fit_from_hist`(state["hist"]) — driver-only, no
     corpus pass.  Returns ``(fold, state)`` with state =
     {"last_batch_id", "hist", "log"}."""
-    from .similarity import _read_index_json, _write_index_json_atomic
 
-    committed = _read_index_json(path, "iso_txn.json")
-    state = {
-        "last_batch_id": (
-            int(committed["last_batch_id"]) if committed is not None else -1
-        ),
-        "hist": (
-            {int(s): (int(v[0]), int(v[1]))
-             for s, v in committed["hist"].items()}
-            if committed is not None
-            else {}
-        ),
-        "log": [],
-    }
-
-    def fold(batch_df, batch_id) -> None:
-        b = int(batch_id)
-        if b <= state["last_batch_id"]:
-            state["log"].append({"batch_id": b, "skipped_replay": True})
-            return
+    def step(batch_df, hist: dict) -> dict:
         df = prepare(batch_df) if prepare is not None else batch_df
         keys = ([op_col] if op_col is not None else []) + [score_col]
         rows = (
@@ -798,7 +759,7 @@ def make_streaming_isotonic_maintainer(
                     f"op column {op_col!r} must contain only 'I'/'D', "
                     f"got {sorted(map(str, ops))}"
                 )
-        hist = dict(state["hist"])
+        hist = dict(hist)
         for r in rows:
             s = int(r[score_col])
             sign = -1 if op_col is not None and r[op_col] == "D" else 1
@@ -815,19 +776,17 @@ def make_streaming_isotonic_maintainer(
                 hist.pop(s, None)
             else:
                 hist[s] = (n1, p1)
-        _write_index_json_atomic(
-            path,
-            "iso_txn.json",
-            {
-                "last_batch_id": b,
-                "hist": {str(s): list(v) for s, v in hist.items()},
-            },
-        )
-        state["hist"] = hist
-        state["last_batch_id"] = b
-        state["log"].append({"batch_id": b, "skipped_replay": False})
+        return hist
 
-    return fold, state
+    return txnlog.replay_guarded_fold(
+        path,
+        txnlog.ISOTONIC,
+        "hist",
+        empty={},
+        decode=lambda h: {int(s): (int(v[0]), int(v[1])) for s, v in h.items()},
+        encode=lambda h: {str(s): list(v) for s, v in h.items()},
+        step=step,
+    )
 
 
 def isotonic_transform_ppm(fit: list[dict], score_col: str) -> Column:

@@ -19,12 +19,15 @@ throughput beats codegen on wide vectors.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..localframe import local_frame
 
+from . import txnlog
 from .dedup import _as_double, cosine_similarity
 
 
@@ -463,7 +466,8 @@ def _lloyd_local(spark, sample_df, n_centroids: int, iters: int, seed: int):
         m, h2 = m[order], h2[order]
     init = np.argsort(h2, kind="stable")[:n_centroids]
     cents = m[init].copy()
-    for _ in range(iters):
+    # an empty corpus samples nothing: no centroids, no Lloyd rounds
+    for _ in range(iters if len(cents) else 0):
         best = np.argmax(m @ cents.T, axis=1)
         nxt = cents.copy()
         for j in range(len(cents)):
@@ -681,151 +685,20 @@ def ivf_topk(
 # ---------------------------------------------------------------------------
 
 
-# ---------------------------------------------------------------------------
-# INDEX COMMIT PROTOCOL — the one authoritative write-up
-# ---------------------------------------------------------------------------
-#
-# Every lifecycle leg's crash/replay rules live HERE (VERDICT r8 task
-# 7: they used to be restated across six docstrings); the per-function
-# docstrings reference this section instead of re-deriving it.
-#
-# WHY: foreachBatch is AT-LEAST-ONCE under restart — a micro-batch
-# whose side-effects committed but whose engine checkpoint did not is
-# replayed after a crash, and a plain ``mode("append")`` parquet write
-# would double-insert.  The fix is the table-format commit pattern in
-# miniature: a driver-side JSON log next to the index (Delta's
-# ``_delta_log`` is exactly this), atomically replaced via tmp file +
-# ``os.replace`` (:func:`_write_index_json_atomic`), single-writer
-# local-filesystem contract (at deployment scale the same records are
-# a Delta/Iceberg commit and the repair is the format's own
-# uncommitted-file cleanup — same note as ``sources/io.py``).
-#
-# THE THREE RECORD TYPES
-#
-# * ``txn.json`` — the COMMIT record: {last_batch_id,
-#   last_cdc_batch_id?, n, mean_assigned_cos}, replaced atomically as
-#   the LAST step of a committing writer.  ``last_batch_id`` is the
-#   append high-water mark (a replayed batch at or below it no-op
-#   skips); ``last_cdc_batch_id`` is the CDC batch-complete marker
-#   (phases 1-3 all landed).  The record doubles as the index's STATS
-#   AUTHORITY: transactional appends commit their (n, mean) fold here
-#   instead of rewriting the 1-row ``/stats`` parquet per micro-batch;
-#   every reader resolves stats via :func:`read_index_stats` (txn
-#   first, parquet fallback) and every batch-mode writer keeps the two
-#   in lockstep, so the parquet can only lag behind a LIVE txn record.
-# * ``txn_intent.json`` — the APPEND intent: {batch_id}, written just
-#   BEFORE the rows append.  Intent newer than the commit record ==
-#   crashed half-written attempt.  The attempt's touched-list set is
-#   NOT recorded (r11: knowing it pre-write cost a separate per-batch
-#   aggregation action); the replay repair recomputes it from the
-#   deterministically-replayed batch — same data (serial replay), same
-#   centroids (every centroid mutator refuses under a live intent),
-#   same deterministic argmax ⇒ the same set.  Legacy intents that DO
-#   carry a ``touched`` list are honored as written.
-# * ``del_intent.json`` — the DELETE intent: {digest(id set +
-#   exclude_batch scope), affected lists, d_n, absolute post-delete
-#   stats, per-list counts}, written BEFORE the partition rewrite and
-#   removed as the delete's last step.  The digest makes a resume
-#   verifiably the SAME delete; the absolute stats make the commit
-#   idempotent under any partial re-run.
-# * ``retrain_intent.json`` — the RETRAIN intent: the absolute
-#   post-retrain stats + centroid count, written only AFTER the staged
-#   trees (``lists_stage`` / ``centroids_stage``) are complete and
-#   removed after the swap + stats refresh — a live intent means the
-#   stage is whole and a re-run finishes the swap idempotently; a
-#   crash before the intent leaves only garbage stage dirs the next
-#   retrain overwrites.
-#   (``probe_txn.json`` / ``iso_txn.json`` — operators/probe.py's
-#   ``make_streaming_probe_maintainer`` /
-#   ``make_streaming_isotonic_maintainer`` — are the single-record
-#   twins for moment-sum and histogram state: fold → atomic replace →
-#   in-memory update; no intent needed because a driver-state fold has
-#   no partial side effects.)
-#
-# WHO WRITES WHAT, IN WHAT ORDER
-#
-# * build: fresh history — removes every record and stage/trash dir,
-#   writes rows (``__batch`` = -1) + ``/centroids`` + ``/stats``.
-# * append(batch_id): skip if batch_id <= last_batch_id; repair if a
-#   newer intent is live (see CRASH MAP); then intent → rows (tagged
-#   ``__batch`` = batch_id) → commit (atomic txn.json replace).
-#   append(batch_id=None) is the batch shape: no intent, rows tagged
-#   -1, stats kept in lockstep across both records.
-# * delete: refuse under a live append intent; digest-check/resume
-#   under a live delete intent; else intent → partition-bounded
-#   rewrite → stats (both records) → intent removal.
-# * rebalance / compact: refuse under EITHER live intent (their
-#   partition rewrites would race the owning leg's repair/resume);
-#   they move rows/bytes, preserve ``__batch`` tags, and update stats
-#   (rebalance) or nothing (compact).
-# * CDC batch b (the maintainer, op_col mode): wholesale skip if
-#   last_cdc_batch_id >= b; else phase 1 (upsert deletes, scoped
-#   ``exclude_batch=b``, SKIPPED when a live append intent for b
-#   proves it already committed — :func:`_upsert_phase1`), phase 2
-#   (inserts + replacements through the append txn), phase 3 (plain
-#   deletes — delete-wins), then the marker rides a txn.json replace
-#   LAST.  A live phase-3 delete intent whose digest matches jumps the
-#   replay straight to phase 3 (it is only ever written after phases
-#   1-2 committed).
-# * batch upsert (:func:`upsert_ivf_index`): the same phase 1 + phase
-#   2; with batch_id it inherits every streaming guarantee, without it
-#   a RETRY self-heals (unscoped phase-1 delete eats the crashed
-#   attempt's half-appended new versions along with the old ones).
-# * retrain (:func:`retrain_ivf_index`): stage both sidecars next to
-#   the live trees → intent (absolute stats) → swap live→trash→
-#   stage→live per sidecar → stats refresh (``last_batch_id`` /
-#   ``last_cdc_batch_id`` CARRY OVER — a live stream keeps its replay
-#   protection across the re-tiling, which a fresh-history rebuild
-#   would destroy) → intent removal → trash drop; every writer
-#   refuses under a live retrain intent and retrain refuses under
-#   live append/delete intents.
-#
-# CRASH MAP (append leg; every point covered)
-#
-#   before intent            -> nothing on disk; replay re-runs whole
-#   after intent, in rows    -> replay repairs (recompute the touched
-#                               partitions from the replayed batch,
-#                               drop the attempt's ``__batch``-tagged
-#                               rows from them — partition-pruned —
-#                               and re-sync /stats from the commit
-#                               record), then re-appends
-#   (an EMPTY streaming batch removes its intent instead of
-#   committing — nothing was written, so the next batch's
-#   out-of-order guard must not see a live intent)
-#   after rows, before commit-> same repair + re-append
-#   after commit             -> no-op skip (visible in the report)
-#
-# Rows carry an integer ``__batch`` DATA column (-1 = base rows from
-# build/rebalance/compaction) so the repair can identify an attempt's
-# rows exactly; rebalance/compaction PRESERVE tags (a repair only ever
-# targets a batch newer than the commit record, and every moved row's
-# tag is at or below it under the maintainer's rebalance-after-commit
-# discipline — enforced for direct callers by the refusal guards).
+# Crash/replay rules for every lifecycle leg below: the INDEX COMMIT
+# PROTOCOL write-up in operators/txnlog.py, the module that owns the records.
 
 _BASE_BATCH = -1  #: __batch tag for build/rebalance/compaction rows
 
-
-def _txn_local_path(path: str, name: str) -> str:
-    if "://" in path and not path.startswith("file://"):
-        raise ValueError(
-            "the IVF index transaction log is a local-filesystem JSON "
-            f"commit record; got {path!r} — use a table-format "
-            "(Delta/Iceberg) commit for object stores"
-        )
-    import os
-
-    return os.path.join(path.removeprefix("file://"), name)
-
-
-def _txn_possible(path: str) -> bool:
-    """True iff ``path`` can carry the local-fs JSON transaction log
-    (see :func:`_txn_local_path` — object stores use a table format).
-    A scheme-less path is treated as DRIVER-LOCAL throughout the
-    lifecycle (txn records, metadata scans, and the r10 sidecar fast
-    paths alike) — on a cluster whose default filesystem is remote,
-    index paths must carry their scheme (``hdfs://``, ``s3a://``, …)
-    to route through the Spark reads/writes."""
-    return "://" not in path or path.startswith("file://")
+#: the CDC sink's log-entry keys for a batch that deleted nothing
+_CDC_NOOP = {
+    "n_deleted": 0,
+    "delete_report": None,
+    "n_upserted": 0,
+    "upsert_delete_report": None,
+    "d_id_route": None,
+    "u_id_route": None,
+}
 
 
 def read_index_stats(spark, path: str) -> tuple[int, float] | None:
@@ -838,8 +711,8 @@ def read_index_stats(spark, path: str) -> tuple[int, float] | None:
     pre-sidecar index (callers decide between rescan and skip).  Any
     failure other than a missing sidecar propagates — swallowing a
     corrupt record would silently freeze a stale drift baseline."""
-    if _txn_possible(path):
-        txn = _read_index_json(path, "txn.json")
+    if txnlog.possible(path):
+        txn = txnlog.read(path, txnlog.COMMIT)
         if txn is not None:
             return int(txn["n"]), float(txn["mean_assigned_cos"])
         # local-fs /stats sidecar: one KB-scale 1-row parquet — read it
@@ -848,7 +721,7 @@ def read_index_stats(spark, path: str) -> tuple[int, float] | None:
         # per call, and every lifecycle entry + every batch-mode append
         # baseline resolution calls this).  A corrupt file still
         # raises; only a MISSING sidecar returns None.
-        stats_dir = _txn_local_path(path, "stats")
+        stats_dir = txnlog.local_path(path, "stats")
         rows = _read_local_sidecar_rows(stats_dir)
         if not rows:
             return None
@@ -866,41 +739,6 @@ def read_index_stats(spark, path: str) -> tuple[int, float] | None:
         if err_class != "PATH_NOT_FOUND" and "PATH_NOT_FOUND" not in str(e):
             raise
         return None
-
-
-def _read_index_json(path: str, name: str) -> dict | None:
-    import json
-
-    try:
-        with open(_txn_local_path(path, name)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-
-
-def _write_index_json_atomic(path: str, name: str, obj: dict) -> None:
-    """Replace ``<path>/<name>`` atomically (tmp file + ``os.replace``
-    — POSIX-atomic, so a reader never sees a torn record and a crash
-    mid-write leaves the previous record intact)."""
-    import json
-    import os
-    import tempfile
-
-    target = _txn_local_path(path, name)
-    os.makedirs(os.path.dirname(target), exist_ok=True)
-    fd, tmp = tempfile.mkstemp(
-        dir=os.path.dirname(target), prefix=".txn_tmp."
-    )
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(obj, f)
-        os.replace(tmp, target)
-    except BaseException:
-        import contextlib
-
-        with contextlib.suppress(OSError):
-            os.remove(tmp)
-        raise
 
 
 def _overwrite_local_sidecar(dir_path: str, tbl) -> None:
@@ -959,7 +797,7 @@ def _write_stats_sidecar(spark, path: str, n: int, mean: float | None) -> None:
     transactional index ``txn.json`` stays the authority regardless
     (``read_index_stats`` resolves it first)."""
     mean = float(mean) if mean is not None else None  # NULL stays NULL
-    if not _txn_possible(path):
+    if not txnlog.possible(path):
         local_frame(spark, 
             [(int(n), mean)], "n long, mean_assigned_cos double"
         ).write.mode("overwrite").parquet(path + "/stats")
@@ -967,7 +805,7 @@ def _write_stats_sidecar(spark, path: str, n: int, mean: float | None) -> None:
     import pyarrow as pa
 
     _overwrite_local_sidecar(
-        _txn_local_path(path, "stats"),
+        txnlog.local_path(path, "stats"),
         pa.table(
             {
                 "n": pa.array([int(n)], pa.int64()),
@@ -985,8 +823,8 @@ def _read_centroids_rows(spark, path: str) -> list[tuple[int, list[float]]]:
     job for a KB-scale file); object stores keep the Spark read.  A
     missing sidecar raises — every caller is operating on an index
     that must already have one."""
-    if _txn_possible(path):
-        cdir = _txn_local_path(path, "centroids")
+    if txnlog.possible(path):
+        cdir = txnlog.local_path(path, "centroids")
         rows = _read_local_sidecar_rows(cdir)
         if not rows:
             raise FileNotFoundError(
@@ -1001,14 +839,14 @@ def _read_centroids_rows(spark, path: str) -> list[tuple[int, list[float]]]:
     )
 
 
-def _centroids_df(spark, path: str) -> DataFrame:
+def centroids_df(spark, path: str) -> DataFrame:
     """The ``/centroids`` sidecar as a DataFrame.  Local-fs indexes
     build it from the driver-side rows (a LocalRelation — broadcasting
     it for assignment joins then needs no file-scan job); object
     stores keep the Spark read.  Values are bit-identical either way
     (parquet float64 -> Python float -> LocalRelation double is an
     exact IEEE round-trip)."""
-    if _txn_possible(path):
+    if txnlog.possible(path):
         return local_frame(spark, 
             _read_centroids_rows(spark, path),
             "__list long, __cent array<double>",
@@ -1023,7 +861,7 @@ def _write_centroids_sidecar(
     driver-side rows — pyarrow on local fs (ZERO Spark jobs), Spark
     write otherwise.  Same crash profile as
     :func:`_write_stats_sidecar`."""
-    if not _txn_possible(path):
+    if not txnlog.possible(path):
         local_frame(spark, 
             [(int(lid), [float(x) for x in c]) for lid, c in rows],
             "__list long, __cent array<double>",
@@ -1032,7 +870,7 @@ def _write_centroids_sidecar(
     import pyarrow as pa
 
     _overwrite_local_sidecar(
-        _txn_local_path(path, name),
+        txnlog.local_path(path, name),
         pa.table(
             {
                 "__list": pa.array([int(lid) for lid, _ in rows], pa.int64()),
@@ -1078,23 +916,17 @@ def _repair_uncommitted_append(
         }
         nonempty = [lid for lid in touched if counts.get(lid, 0) > 0]
         if nonempty:
-            conf_key = "spark.sql.sources.partitionOverwriteMode"
-            old_mode = spark.conf.get(conf_key, "static")
-            spark.conf.set(conf_key, "dynamic")
-            try:
-                kept.filter(F.col("list_id").isin(nonempty)).repartition(
-                    "list_id"
-                ).write.mode("overwrite").partitionBy("list_id").parquet(
-                    lists_path
-                )
-            finally:
-                spark.conf.set(conf_key, old_mode)
-        local_lists = _txn_local_path(path, "lists")
+            kept.filter(F.col("list_id").isin(nonempty)).repartition(
+                "list_id"
+            ).write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("list_id").parquet(lists_path)
+        local_lists = txnlog.local_path(path, "lists")
         for lid in touched:
             if counts.get(lid, 0) == 0:
                 # the dead attempt CREATED this list: dynamic overwrite
                 # cannot write an empty partition, so drop the dir
-                # (local-fs contract, see module note)
+                # (local-fs contract, see txnlog)
                 shutil.rmtree(
                     os.path.join(local_lists, f"list_id={lid}"),
                     ignore_errors=True,
@@ -1103,63 +935,6 @@ def _repair_uncommitted_append(
         _write_stats_sidecar(
             spark, path, int(txn["n"]), float(txn["mean_assigned_cos"])
         )
-
-
-def _assert_no_uncommitted_delete(path: str) -> None:
-    """Refuse to write into an index mid-delete: an uncommitted
-    ``del_intent.json`` means a crashed :func:`delete_from_ivf_index`
-    owns the affected partitions until its resume completes —
-    appending/rewriting under it is the second-writer scenario the
-    local-fs log forbids (same posture as compaction's refusal under
-    an uncommitted append intent)."""
-    if not _txn_possible(path):
-        return
-    if _read_index_json(path, "del_intent.json") is not None:
-        raise RuntimeError(
-            "ivf index has an uncommitted delete intent: re-run "
-            "delete_from_ivf_index with the same ids so its resume "
-            "completes first"
-        )
-
-
-def _assert_no_uncommitted_retrain(path: str) -> None:
-    """Refuse to write into an index mid-retrain: a live
-    ``retrain_intent.json`` means a crashed :func:`retrain_ivf_index`
-    owns the WHOLE index (its staged swap may have moved either
-    sidecar) until a re-run completes the swap."""
-    if not _txn_possible(path):
-        return
-    if _read_index_json(path, "retrain_intent.json") is not None:
-        raise RuntimeError(
-            "ivf index has an uncommitted retrain intent: re-run "
-            "retrain_ivf_index so its staged swap completes first"
-        )
-
-
-def _assert_no_uncommitted_append(path: str) -> dict | None:
-    """Refuse to rewrite index partitions while an APPEND intent newer
-    than the commit record is live: the crashed append's replay repair
-    owns the touched partitions until it runs, and a partition rewrite
-    racing it is the second-writer scenario the local-fs log forbids.
-    The ONE guard rebalance, compaction, and delete share (round-8
-    ADVICE: rebalance lacked it, so a direct-API rebalance after a
-    crashed append could move the dead attempt's tagged rows out of
-    the intent's touched partitions and strand them for the repair).
-    Returns the commit record (or ``None``) so callers that need it
-    don't re-read it."""
-    if not _txn_possible(path):
-        return None
-    txn = _read_index_json(path, "txn.json")
-    intent = _read_index_json(path, "txn_intent.json")
-    committed = int(txn["last_batch_id"]) if txn is not None else -1
-    if intent is not None and int(intent["batch_id"]) > committed:
-        raise RuntimeError(
-            "ivf index has an uncommitted append intent (batch "
-            f"{intent['batch_id']} > committed {committed}): replay the "
-            "stream so the repair runs first — rewriting partitions "
-            "under it would race the repair's partition rewrite"
-        )
-    return txn
 
 
 def build_ivf_index(
@@ -1180,32 +955,12 @@ def build_ivf_index(
     storage.  Centroids live in a sidecar table.  This is the 100 TB
     shape: the expensive assignment shuffle happens once at build; each
     query batch reads ~nprobe/n_centroids of the data."""
-    if _txn_possible(path):
-        # a REBUILD at an existing path starts a fresh transaction
-        # history: a leftover commit record would be authoritative for
-        # read_index_stats but describe the PREVIOUS index's contents
-        import contextlib
-        import os
-        import shutil
-
-        for name in (
-            "txn.json",
-            "txn_intent.json",
-            "del_intent.json",
-            "retrain_intent.json",
-        ):
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(_txn_local_path(path, name))
-        for name in (
-            "lists_stage", "centroids_stage", "lists_trash",
-            "centroids_trash",
-        ):
-            shutil.rmtree(_txn_local_path(path, name), ignore_errors=True)
+    txnlog.reset(path)
     spark = corpus.sparkSession
     cents = centroids if centroids is not None else train_ivf_centroids(
         corpus, vec_col, n_centroids=n_centroids, iters=train_iters, seed=seed
     )
-    assigned = _assign_to_lists(corpus, id_col, vec_col, cents)
+    assigned = assign_to_lists(corpus, id_col, vec_col, cents)
     # cluster the write by list id: one task per list writes one file,
     # instead of every shuffle partition writing a sliver into every
     # list dir (32 partitions x n_centroids tiny files slows both the
@@ -1213,7 +968,7 @@ def build_ivf_index(
     assigned = assigned.localCheckpoint(eager=False)
     # __batch = -1 tags these as BASE rows: every file in the index
     # carries the column from birth, so the append transaction log's
-    # replay repair can always filter on it (see the txn note above)
+    # replay repair can always filter on it (see txnlog)
     assigned.drop("__best_cos").withColumn(
         "__batch", F.lit(_BASE_BATCH)
     ).repartition("list_id").write.mode(
@@ -1235,7 +990,7 @@ def build_ivf_index(
     _write_stats_sidecar(spark, path, int(st["n"]), st["mean_assigned_cos"])
 
 
-def _assign_to_lists(
+def assign_to_lists(
     df: DataFrame,
     id_col: str,
     vec_col: str,
@@ -1289,7 +1044,7 @@ def _scan_list_files(path: str) -> dict:
     footer reads)."""
     import os
 
-    base = _txn_local_path(path, "lists")
+    base = txnlog.local_path(path, "lists")
     out: dict = {}
     if not os.path.isdir(base):
         return out
@@ -1302,6 +1057,69 @@ def _scan_list_files(path: str) -> dict:
     return out
 
 
+def _footer_rows(file_path: str) -> int:
+    """Row count of one parquet file from its footer (driver-side
+    metadata, no data pages read)."""
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(file_path).metadata.num_rows
+
+
+def _append_report(
+    n_batch: int = 0,
+    batch_mean: float | None = None,
+    build_mean: float | None = None,
+    list_counts: dict | None = None,
+    threshold: float = 0.0,
+    skipped_replay: bool = False,
+) -> dict:
+    """:func:`append_ivf_index`'s drift report; the defaults are the
+    no-op report of an empty batch (or, with ``skipped_replay``, of a
+    replayed one)."""
+    ratio = (batch_mean / build_mean) if build_mean else 1.0
+    return {
+        "n_appended": n_batch,
+        "batch_mean_cos": batch_mean,
+        "build_mean_cos": build_mean,
+        "drift_ratio": ratio,
+        "retrain_recommended": bool(ratio < threshold),
+        "list_counts": list_counts or {},
+        "skipped_replay": skipped_replay,
+    }
+
+
+def _commit_append(
+    spark, path, batch_id, txn, st, n_batch, batch_mean, list_counts, threshold
+) -> dict:
+    """Fold an appended batch into the running stats and commit it,
+    then report its drift against the PRE-append baseline ``st``.
+
+    The fold is the exact running (n, mean assigned cosine) over EVERY
+    row in the index, which is what lets rebalance_ivf_index update it
+    incrementally when it re-scores split rows.  A streaming append
+    commits it on the commit record — atomic replace, the LAST step, so
+    at-or-below this id is now a no-op replay; read_index_stats
+    resolves the record first, so the 1-row /stats parquet is not
+    rewritten per micro-batch.  A batch append goes through
+    :func:`txnlog.commit_stats`, which keeps a transactional index's
+    record in lockstep (a bulk backfill after a stream stopped must not
+    leave the next streaming batch a baseline that never saw it)."""
+    base_n, build_mean = st
+    new_n = base_n + n_batch
+    new_mean = (build_mean * base_n + batch_mean * n_batch) / new_n
+    if batch_id is None:
+        txnlog.commit_stats(
+            path, new_n, new_mean, partial(_write_stats_sidecar, spark, path), txn
+        )
+    else:
+        txnlog.put(
+            path,
+            txnlog.COMMIT,
+            {"last_batch_id": batch_id, "n": new_n, "mean_assigned_cos": new_mean},
+        )
+    return _append_report(n_batch, batch_mean, build_mean, list_counts, threshold)
+
+
 def _append_batch_fused(
     spark,
     new_batch: DataFrame,
@@ -1311,8 +1129,8 @@ def _append_batch_fused(
     drift_ratio_threshold: float,
     cents: DataFrame,
     st: tuple,
-    batch_id: int | None = None,
-    txn: dict | None = None,
+    batch_id: int | None,
+    txn: dict | None,
 ) -> dict:
     """ONE-action append (r11): the partitioned append write carries
     the drift aggregates as observed metrics, and the exact per-list
@@ -1325,30 +1143,24 @@ def _append_batch_fused(
     (same files Spark wrote).  Only reachable on a local-fs index with
     a resolvable stats baseline (see call site).
 
-    With ``batch_id`` (streaming) the exactly-once protocol is
-    preserved with a SLIMMER intent: ``{batch_id}`` only — the
-    touched-list set is no longer known before the write (that
-    knowledge was exactly what cost the second action), so the replay
-    repair recomputes it from the deterministically-replayed batch
-    instead (see the INDEX COMMIT PROTOCOL section; centroids cannot
-    have moved under a live intent because every centroid mutator
-    refuses via ``_assert_no_uncommitted_append``)."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import Observation
-
-    import contextlib
+    With ``batch_id`` (streaming) the intent is ``{batch_id}`` only:
+    the touched-list set is not known before the write (knowing it was
+    exactly what cost the second action), so the replay repair
+    recomputes it from the deterministically-replayed batch (INDEX
+    COMMIT PROTOCOL in :mod:`.txnlog`; centroids cannot have moved
+    under a live intent because every centroid mutator refuses via
+    :func:`txnlog.guard`)."""
     import os
 
-    base_n, build_mean = int(st[0]), float(st[1])
+    from pyspark.sql import Observation
+
     pre = _scan_list_files(path)
     if batch_id is not None:
         # intent BEFORE the rows write (crash between the two leaves a
         # no-file intent the replay repairs as a no-op)
-        _write_index_json_atomic(
-            path, "txn_intent.json", {"batch_id": int(batch_id)}
-        )
+        txnlog.put(path, txnlog.APPEND_INTENT, {"batch_id": batch_id})
     obs = Observation()
-    assigned = _assign_to_lists(new_batch, id_col, vec_col, cents)
+    assigned = assign_to_lists(new_batch, id_col, vec_col, cents)
     to_write = (
         assigned.observe(
             obs,
@@ -1358,8 +1170,7 @@ def _append_batch_fused(
         )
         .drop("__best_cos")
         .withColumn(
-            "__batch",
-            F.lit(_BASE_BATCH if batch_id is None else int(batch_id)),
+            "__batch", F.lit(_BASE_BATCH if batch_id is None else batch_id)
         )
     )
     to_write.repartition("list_id").write.mode("append").partitionBy(
@@ -1371,76 +1182,36 @@ def _append_batch_fused(
         # empty batch: the write landed no files (footer diff would be
         # empty too) — same no-op report as the two-action path.  A
         # streaming empty batch removes its intent (nothing to repair,
-        # nothing committed — the two-action path never wrote one), so
-        # the NEXT batch's out-of-order guard stays quiet.
+        # nothing committed), so the NEXT batch's out-of-order guard
+        # stays quiet.
         if batch_id is not None:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(_txn_local_path(path, "txn_intent.json"))
-        return {
-            "n_appended": 0,
-            "batch_mean_cos": None,
-            "build_mean_cos": None,
-            "drift_ratio": 1.0,
-            "retrain_recommended": False,
-            "list_counts": {},
-            "skipped_replay": False,
-        }
+            txnlog.put(path, txnlog.APPEND_INTENT, None)
+        return _append_report()
     n_scored = int(m["ns"])
     batch_mean = (float(m["s"]) / n_scored) if n_scored else 0.0
-    lists_base = _txn_local_path(path, "lists")
+    lists_base = txnlog.local_path(path, "lists")
+    added = {
+        key: os.path.join(lists_base, f"list_id={key[0]}", key[1])
+        for key in _scan_list_files(path)
+        if key not in pre
+    }
     list_counts: dict = {}
-    n_footer = 0
-    for lid, fname in _scan_list_files(path):
-        if (lid, fname) not in pre:
-            nrows = pq.ParquetFile(
-                os.path.join(lists_base, f"list_id={lid}", fname)
-            ).metadata.num_rows
-            list_counts[lid] = list_counts.get(lid, 0) + nrows
-            n_footer += nrows
+    for (lid, _), f in added.items():
+        list_counts[lid] = list_counts.get(lid, 0) + _footer_rows(f)
+    n_footer = sum(list_counts.values())
     if n_footer != n_batch:
         raise RuntimeError(
             f"ivf append wrote {n_footer} rows by parquet footer but "
             f"observed {n_batch} in the write job — a second writer "
-            "touched the index mid-append"
+            "touched the index mid-append.  Nothing was committed: the "
+            "stats records still describe the committed index, without "
+            f"the files this attempt added: {sorted(added.values())}"
         )
     list_counts = {lid: n for lid, n in list_counts.items() if n > 0}
-    new_n = base_n + n_batch
-    new_mean = (build_mean * base_n + batch_mean * n_batch) / new_n
-    if batch_id is not None:
-        # COMMIT: atomic replace, the last step — same record and same
-        # rules as the two-action streaming path (read_index_stats
-        # resolves txn-first, so no per-batch /stats parquet rewrite)
-        _write_index_json_atomic(
-            path,
-            "txn.json",
-            {
-                "last_batch_id": int(batch_id),
-                "n": new_n,
-                "mean_assigned_cos": new_mean,
-            },
-        )
-    else:
-        _write_stats_sidecar(spark, path, new_n, new_mean)
-        prior = txn if txn is not None else _read_index_json(path, "txn.json")
-        if prior is not None:
-            # keep the authoritative txn record in lockstep (bulk
-            # backfill onto a transactional index — same rule as the
-            # two-action path)
-            _write_index_json_atomic(
-                path,
-                "txn.json",
-                {**prior, "n": new_n, "mean_assigned_cos": new_mean},
-            )
-    ratio = (batch_mean / build_mean) if build_mean else 1.0
-    return {
-        "n_appended": n_batch,
-        "batch_mean_cos": batch_mean,
-        "build_mean_cos": build_mean,
-        "drift_ratio": ratio,
-        "retrain_recommended": bool(ratio < drift_ratio_threshold),
-        "list_counts": list_counts,
-        "skipped_replay": False,
-    }
+    return _commit_append(
+        spark, path, batch_id, txn, st, n_batch, batch_mean, list_counts,
+        drift_ratio_threshold,
+    )
 
 
 def append_ivf_index(
@@ -1487,93 +1258,72 @@ def append_ivf_index(
     ``{"skipped_replay": True, ...}`` no-op report, a half-written
     crashed attempt is repaired before re-appending, and the commit
     record is replaced atomically as the last step (commit/crash
-    rules: INDEX COMMIT PROTOCOL, the module section above; the
+    rules: INDEX COMMIT PROTOCOL in :mod:`.txnlog`; the
     kill/replay proof is ``stream_ivf_recovery`` +
     ``tests/test_r8_recovery.py``).  Without ``batch_id`` the append
     is the plain batch operation (no tags beyond ``__batch = -1``-based
     files, no log reads).
     """
     spark = new_batch.sparkSession
-    _assert_no_uncommitted_delete(path)
-    _assert_no_uncommitted_retrain(path)
-    txn: dict | None = None
+    txn = txnlog.guard(path, owner=txnlog.APPEND_INTENT)
     if batch_id is not None:
         batch_id = int(batch_id)
-        txn = _read_index_json(path, "txn.json")
         committed = int(txn["last_batch_id"]) if txn is not None else -1
         if batch_id <= committed:
-            return {
-                "n_appended": 0,
-                "batch_mean_cos": None,
-                "build_mean_cos": None,
-                "drift_ratio": 1.0,
-                "retrain_recommended": False,
-                "list_counts": {},
-                "skipped_replay": True,
-            }
-        intent = _read_index_json(path, "txn_intent.json")
-        if intent is not None and int(intent["batch_id"]) > committed:
-            if int(intent["batch_id"]) != batch_id:
-                raise RuntimeError(
-                    "ivf txn log out of order: uncommitted intent for "
-                    f"batch {intent['batch_id']} but replaying batch "
-                    f"{batch_id} — streaming replays are serial, so this "
-                    "index has a second writer or a corrupt log"
-                )
-            if "touched" in intent:
-                touched = intent["touched"]
-            else:
-                # slim r11 intent ({batch_id} only): recompute the
-                # attempt's touched-list set from the deterministically
-                # replayed batch — same data (serial replay contract),
-                # same centroids (every centroid mutator refuses under
-                # a live intent via _assert_no_uncommitted_append),
-                # same deterministic argmax assignment ⇒ the exact set
-                # the crashed attempt wrote into.  One bounded job,
-                # paid ONLY on the crash-replay path.
-                if cents is None:
-                    cents = _centroids_df(spark, path)
-                touched = [
-                    r["list_id"]
-                    for r in _assign_to_lists(
-                        new_batch, id_col, vec_col, cents
-                    )
-                    .select("list_id")
-                    .distinct()
-                    .collect()
-                ]
-            _repair_uncommitted_append(spark, path, batch_id, touched, txn)
+            return _append_report(skipped_replay=True)
     # ``cents`` lets a caller that already holds the centroid model
     # (the streaming maintainer caches it across micro-batches,
     # invalidating on rebalance/retrain) skip the per-call sidecar
     # read — one fewer scan per micro-batch on the hot append path
     if cents is None:
-        cents = _centroids_df(spark, path)
+        cents = centroids_df(spark, path)
+    intent = txnlog.live_append(path, txn) if batch_id is not None else None
+    if intent is not None:
+        if int(intent["batch_id"]) != batch_id:
+            raise RuntimeError(
+                "ivf txn log out of order: uncommitted intent for "
+                f"batch {intent['batch_id']} but replaying batch "
+                f"{batch_id} — streaming replays are serial, so this "
+                "index has a second writer or a corrupt log"
+            )
+        if "touched" in intent:
+            # an intent written before intents stopped recording the
+            # touched set: honor it as written
+            touched = intent["touched"]
+        else:
+            # recompute the attempt's touched-list set from the
+            # deterministically replayed batch — same data (serial
+            # replay contract), same centroids (every centroid mutator
+            # refuses under a live intent via txnlog.guard), same
+            # deterministic argmax assignment ⇒ the exact set the
+            # crashed attempt wrote into.  One bounded job, paid ONLY
+            # on the crash-replay path.
+            touched = [
+                r["list_id"]
+                for r in assign_to_lists(new_batch, id_col, vec_col, cents)
+                .select("list_id")
+                .distinct()
+                .collect()
+            ]
+        _repair_uncommitted_append(spark, path, batch_id, touched, txn)
 
-    if _txn_possible(path):
+    if txnlog.possible(path):
         # ONE-action fast path (r11, guide §1.2/§5): the write itself
         # carries the drift aggregates via ``observe`` and the exact
         # per-list appended counts come from the new files' parquet
         # footers afterwards (driver-side metadata, zero jobs — the
-        # ``_list_sizes`` convention).  Batch mode writes no intent at
-        # all; streaming mode writes the slim ``{batch_id}`` intent
-        # inside the fused helper (repair recomputes touched, above).
-        # Requires a driver-resolvable baseline: the txn commit record
-        # (streaming) or the stats sidecar (batch); a pre-sidecar
-        # index stays on the two-action path below because its
-        # baseline rescan must run before the write.
-        if txn is not None:
-            st = (int(txn["n"]), float(txn["mean_assigned_cos"]))
-        else:
-            st = read_index_stats(spark, path)
+        # ``_list_sizes`` convention).  Requires a driver-resolvable
+        # baseline (the commit record or the stats sidecar); a
+        # pre-sidecar index stays on the two-action path below because
+        # its baseline rescan must run before the write.
+        st = read_index_stats(spark, path)
         if st is not None:
             return _append_batch_fused(
                 spark, new_batch, id_col, vec_col, path,
-                drift_ratio_threshold, cents, st,
-                batch_id=batch_id, txn=txn,
+                drift_ratio_threshold, cents, st, batch_id, txn,
             )
 
-    assigned = _assign_to_lists(new_batch, id_col, vec_col, cents).localCheckpoint(
+    assigned = assign_to_lists(new_batch, id_col, vec_col, cents).localCheckpoint(
         eager=False
     )
     # ONE bounded job (rows per TOUCHED list): the global (n, mean)
@@ -1598,15 +1348,7 @@ def append_ivf_index(
         # empty append period: harmless no-op — return BEFORE resolving
         # the baseline, so a pre-sidecar index doesn't pay a full
         # standing-list rescan just to discard it
-        return {
-            "n_appended": 0,
-            "batch_mean_cos": None,
-            "build_mean_cos": None,
-            "drift_ratio": 1.0,
-            "retrain_recommended": False,
-            "list_counts": {},
-            "skipped_replay": False,
-        }
+        return _append_report()
     n_scored = sum(int(r["ns"]) for r in per_list)
     # all-zero-norm batch: no meaningful drift signal; mean 0.0 makes
     # the ratio 0 and flags retrain — the conservative read
@@ -1620,99 +1362,34 @@ def append_ivf_index(
     # Resolve the build-time baseline BEFORE the append WRITE: the
     # pre-sidecar fallback rescans the STANDING lists, and doing that
     # after the write would fold the batch being measured into its own
-    # baseline, biasing drift_ratio toward 1.0.  The txn commit record
-    # carries the same (n, mean) the /stats sidecar does (every writer
-    # keeps the pair in lockstep — append commits both, rebalance
-    # refreshes both), so a committed streaming index resolves the
-    # baseline driver-side with ZERO Spark jobs — one fewer job per
-    # micro-batch (VERDICT r7 task 2: the streaming entries are
-    # job-count bound).
-    if txn is not None:
-        base_n, build_mean = int(txn["n"]), float(txn["mean_assigned_cos"])
-    else:
-        st = read_index_stats(spark, path)
-        if st is not None:
-            base_n, build_mean = st
-        else:
-            # Pre-sidecar index: ONLY a missing stats record may fall
-            # back to the standing-list rescan (the accessor raises on
-            # anything else — a silent rescan would mask exactly the
-            # drift this report exists to surface).
-            lists = spark.read.parquet(path + "/lists")
-            rescored = _assign_to_lists(lists, id_col, "__v", cents)
-            b = rescored.agg(
-                F.count(F.lit(1)).alias("n"), F.avg("__best_cos").alias("m")
-            ).collect()[0]
-            base_n, build_mean = int(b["n"]), float(b["m"])
+    # baseline, biasing drift_ratio toward 1.0.
+    st = read_index_stats(spark, path)
+    if st is None:
+        # Pre-sidecar index: ONLY a missing stats record may fall back
+        # to the standing-list rescan (the accessor raises on anything
+        # else — a silent rescan would mask exactly the drift this
+        # report exists to surface).
+        lists = spark.read.parquet(path + "/lists")
+        rescored = assign_to_lists(lists, id_col, "__v", cents)
+        b = rescored.agg(
+            F.count(F.lit(1)).alias("n"), F.avg("__best_cos").alias("m")
+        ).collect()[0]
+        st = (int(b["n"]), float(b["m"]))
 
-    to_write = assigned.drop("__best_cos")
     if batch_id is not None:
         # intent BEFORE the rows write: a crash anywhere from here to
         # the commit record leaves an intent newer than the commit, so
         # the replay repairs (drops these tagged rows) and re-appends
-        _write_index_json_atomic(
-            path,
-            "txn_intent.json",
-            {"batch_id": batch_id, "touched": sorted(list_counts)},
-        )
-        to_write = to_write.withColumn("__batch", F.lit(batch_id))
-    else:
-        to_write = to_write.withColumn("__batch", F.lit(_BASE_BATCH))
-    to_write.repartition("list_id").write.mode(
-        "append"
-    ).partitionBy("list_id").parquet(path + "/lists")
-
-    # Fold the batch into the stats record AFTER the drift comparison:
-    # it is the exact running (n, mean assigned cosine) over EVERY row
-    # in the index, which is what lets rebalance_ivf_index update it
-    # incrementally when it re-scores split rows — an append-blind
-    # baseline would make that delta math wrong the moment a split
-    # list contains appended rows.  The drift ratio above still
-    # compares the batch against the PRE-append baseline.
-    new_n = base_n + n_batch
-    new_mean = (build_mean * base_n + batch_mean * n_batch) / new_n
-    if batch_id is None:
-        _write_stats_sidecar(spark, path, new_n, new_mean)
-        if _txn_possible(path):
-            # a batch-mode append onto a TRANSACTIONAL index (e.g. a
-            # bulk backfill after a stream stopped) must keep the
-            # authoritative record in lockstep, or the next streaming
-            # batch would resolve a baseline that never saw this fold
-            prior = _read_index_json(path, "txn.json")
-            if prior is not None:
-                _write_index_json_atomic(
-                    path,
-                    "txn.json",
-                    {**prior, "n": new_n, "mean_assigned_cos": new_mean},
-                )
-    else:
-        # COMMIT: atomic replace, the last step — at-or-below this id
-        # is now a guaranteed no-op replay.  The record carries the
-        # stats fold itself (read_index_stats resolves txn-first), so
-        # the transactional path does NOT rewrite the 1-row /stats
-        # parquet per micro-batch: one fewer job per batch and no
-        # sidecar small-file churn, with no reader able to observe the
-        # lagging parquet.
-        _write_index_json_atomic(
-            path,
-            "txn.json",
-            {
-                "last_batch_id": batch_id,
-                "n": new_n,
-                "mean_assigned_cos": new_mean,
-            },
-        )
-
-    ratio = (batch_mean / build_mean) if build_mean else 1.0
-    return {
-        "n_appended": n_batch,
-        "batch_mean_cos": batch_mean,
-        "build_mean_cos": build_mean,
-        "drift_ratio": ratio,
-        "retrain_recommended": bool(ratio < drift_ratio_threshold),
-        "list_counts": list_counts,
-        "skipped_replay": False,
-    }
+        txnlog.put(path, txnlog.APPEND_INTENT, {"batch_id": batch_id})
+    assigned.drop("__best_cos").withColumn(
+        "__batch", F.lit(_BASE_BATCH if batch_id is None else batch_id)
+    ).repartition("list_id").write.mode("append").partitionBy(
+        "list_id"
+    ).parquet(path + "/lists")
+    return _commit_append(
+        spark, path, batch_id, txn, st, n_batch, batch_mean, list_counts,
+        drift_ratio_threshold,
+    )
 
 
 def _list_sizes(spark, path: str) -> dict:
@@ -1726,12 +1403,10 @@ def _list_sizes(spark, path: str) -> dict:
     zero rows is absent from the map exactly as the groupBy's would
     be); object stores keep the one bounded Spark job (one row per
     list)."""
-    if _txn_possible(path):
+    if txnlog.possible(path):
         import os
 
-        import pyarrow.parquet as pq
-
-        base = _txn_local_path(path, "lists")
+        base = txnlog.local_path(path, "lists")
         sizes: dict = {}
         for entry in os.scandir(base):
             if entry.is_dir() and entry.name.startswith("list_id="):
@@ -1739,7 +1414,7 @@ def _list_sizes(spark, path: str) -> dict:
                 n = 0
                 for f in os.scandir(entry.path):
                     if f.is_file() and not f.name.startswith(("_", ".")):
-                        n += pq.ParquetFile(f.path).metadata.num_rows
+                        n += _footer_rows(f.path)
                 if n > 0:
                     sizes[lid] = n
         return sizes
@@ -1871,8 +1546,7 @@ def make_streaming_ivf_maintainer(
     must be INTEGER-VALUED (the delete leg's documented contract); a
     NULL id on a 'D'/'U' row fails loud (round-8 ADVICE: it previously
     no-opped silently via collect_set's NULL skip).  The full phase
-    ordering and every crash window: INDEX COMMIT PROTOCOL, the module
-    section above.
+    ordering and every crash window: INDEX COMMIT PROTOCOL in :mod:`.txnlog`.
     """
     if trigger_ratio < split_ratio:
         raise ValueError(
@@ -1888,7 +1562,7 @@ def make_streaming_ivf_maintainer(
         )
     sizes = _list_sizes(spark, path)  # bounded: one row per list
     fcounts: dict = (
-        _ivf_list_files(path)[0] if compact_files_per_list is not None
+        ivf_list_files(path)[0] if compact_files_per_list is not None
         else {}
     )  # driver-side metadata scan, zero Spark jobs
     log: list = []
@@ -1914,12 +1588,28 @@ def make_streaming_ivf_maintainer(
 
     def _cents():
         if cents_cache[0] is None:
-            cents_cache[0] = _centroids_df(spark, path)
+            cents_cache[0] = centroids_df(spark, path)
         return cents_cache[0]
 
     def _max_share_ppm() -> int:
         total = sum(sizes.values())
         return max(sizes.values()) * 1_000_000 // total if total else 0
+
+    def _entry(batch_id, n_appended=0, skipped_replay=False, **cdc) -> dict:
+        """One log entry; ``cdc`` adds the CDC sink's keys."""
+        return {
+            "batch_id": int(batch_id),
+            "n_appended": n_appended,
+            "max_share_ppm": _max_share_ppm(),
+            "rebalanced": False,
+            "rebalance_report": None,
+            "compacted": False,
+            "compaction_report": None,
+            "retrained": False,
+            "retrain_report": None,
+            "skipped_replay": skipped_replay,
+            **cdc,
+        }
 
     def _maintain_inserts(batch_df, batch_id) -> None:
         rep = append_ivf_index(
@@ -1941,20 +1631,7 @@ def make_streaming_ivf_maintainer(
             # checkpoint): exactly-once = skip; sizes are already
             # right (same-process retry advanced them; a restarted
             # process re-seeded them from the committed index)
-            log.append(
-                {
-                    "batch_id": int(batch_id),
-                    "n_appended": 0,
-                    "max_share_ppm": _max_share_ppm(),
-                    "rebalanced": False,
-                    "rebalance_report": None,
-                    "compacted": False,
-                    "compaction_report": None,
-                    "retrained": False,
-                    "retrain_report": None,
-                    "skipped_replay": True,
-                }
-            )
+            log.append(_entry(batch_id, skipped_replay=True))
             return
         for lid, n in rep["list_counts"].items():
             sizes[lid] = sizes.get(lid, 0) + n
@@ -1962,18 +1639,7 @@ def make_streaming_ivf_maintainer(
             # the append writes exactly ONE file per touched list
             for lid in rep["list_counts"]:
                 fcounts[lid] = fcounts.get(lid, 0) + 1
-        entry = {
-            "batch_id": int(batch_id),
-            "n_appended": rep["n_appended"],
-            "max_share_ppm": _max_share_ppm(),
-            "rebalanced": False,
-            "rebalance_report": None,
-            "compacted": False,
-            "compaction_report": None,
-            "retrained": False,
-            "retrain_report": None,
-            "skipped_replay": False,
-        }
+        entry = _entry(batch_id, rep["n_appended"])
         if retrain_after_drift_batches is not None:
             drift_streak[0] = (
                 drift_streak[0] + 1 if rep["retrain_recommended"] else 0
@@ -1992,7 +1658,7 @@ def make_streaming_ivf_maintainer(
                 unsplittable.clear()
                 if compact_files_per_list is not None:
                     fcounts.clear()
-                    fcounts.update(_ivf_list_files(path)[0])
+                    fcounts.update(ivf_list_files(path)[0])
                 entry["retrained"] = True
                 entry["retrain_report"] = rt
                 entry["max_share_ppm"] = _max_share_ppm()
@@ -2038,7 +1704,7 @@ def make_streaming_ivf_maintainer(
                     # the split rewrote partitions: re-survey (driver
                     # metadata scan, free, only after the rare split)
                     fcounts.clear()
-                    fcounts.update(_ivf_list_files(path)[0])
+                    fcounts.update(ivf_list_files(path)[0])
             else:
                 for lid in hot:
                     unsplittable[lid] = sizes[lid]
@@ -2053,7 +1719,7 @@ def make_streaming_ivf_maintainer(
                 target_file_bytes=compact_target_bytes,
             )
             fcounts.clear()
-            fcounts.update(_ivf_list_files(path)[0])
+            fcounts.update(ivf_list_files(path)[0])
             entry["compacted"] = cp["n_compacted"] > 0
             entry["compaction_report"] = cp
         log.append(entry)
@@ -2063,30 +1729,11 @@ def make_streaming_ivf_maintainer(
             _maintain_inserts(batch_df, batch_id)
             return
         b = int(batch_id)
-        txn = _read_index_json(path, "txn.json")
+        txn = txnlog.read(path, txnlog.COMMIT)
         if txn is not None and int(txn.get("last_cdc_batch_id", -1)) >= b:
             # the whole batch (inserts AND deletes) committed before a
             # crash: wholesale skip — the CDC exactly-once guarantee
-            log.append(
-                {
-                    "batch_id": b,
-                    "n_appended": 0,
-                    "max_share_ppm": _max_share_ppm(),
-                    "rebalanced": False,
-                    "rebalance_report": None,
-                    "compacted": False,
-                    "compaction_report": None,
-                    "retrained": False,
-                    "retrain_report": None,
-                    "skipped_replay": True,
-                    "n_deleted": 0,
-                    "delete_report": None,
-                    "n_upserted": 0,
-                    "upsert_delete_report": None,
-                    "d_id_route": None,
-                    "u_id_route": None,
-                }
-            )
+            log.append(_entry(b, skipped_replay=True, **_CDC_NOOP))
             return
         # ONE bounded job: ops present, per-op row / distinct-D-U-id /
         # NULL-id counts, and a driver id sample CAPPED at
@@ -2186,7 +1833,7 @@ def make_streaming_ivf_maintainer(
                 # the delete rewrote the affected partitions: re-survey
                 # (driver metadata scan, zero Spark jobs)
                 fcounts.clear()
-                fcounts.update(_ivf_list_files(path)[0])
+                fcounts.update(ivf_list_files(path)[0])
 
         # THREE phases, committed in order, each idempotent:
         #   1. upserts drop their OLD versions (scoped to rows NOT
@@ -2199,17 +1846,15 @@ def make_streaming_ivf_maintainer(
         # A live phase-3 del intent proves phases 1-2 committed (it is
         # only written after them), so a replay jumps straight there —
         # running phase 1 under it would trip the digest guard.
-        live = _read_index_json(path, "del_intent.json")
+        live = txnlog.read(path, txnlog.DELETE_INTENT)
         skip_to_phase3 = (
             live is not None
             and "D" in opset
             and live["digest"] == _delete_ids_digest(d_ids)
         )
         delta = {
-            "n_deleted": 0,
-            "delete_report": None,
+            **_CDC_NOOP,
             "n_upserted": n_ids.get("U", 0),
-            "upsert_delete_report": None,
             "d_id_route": d_route,
             "u_id_route": u_route,
         }
@@ -2245,37 +1890,17 @@ def make_streaming_ivf_maintainer(
             delta["delete_report"] = drep
         # batch-complete marker LAST: a crash anywhere above replays
         # the batch through the idempotent insert/delete legs
-        txn2 = _read_index_json(path, "txn.json")
+        txn2 = txnlog.read(path, txnlog.COMMIT)
         if txn2 is None:
             st = read_index_stats(spark, path)
-            txn2 = {
-                "last_batch_id": -1,
-                "n": st[0],
-                "mean_assigned_cos": st[1],
-            }
-        _write_index_json_atomic(
-            path, "txn.json", {**txn2, "last_cdc_batch_id": b}
-        )
+            txn2 = {"last_batch_id": -1, "n": st[0], "mean_assigned_cos": st[1]}
+        txnlog.put(path, txnlog.COMMIT, {**txn2, "last_cdc_batch_id": b})
         if len(log) > log_len_before:
             log[-1].update(delta)  # fold onto the entry THIS
             # invocation's insert leg appended (never a stale entry
             # from a failed same-process attempt)
         else:
-            log.append(
-                {
-                    "batch_id": b,
-                    "n_appended": 0,
-                    "max_share_ppm": _max_share_ppm(),
-                    "rebalanced": False,
-                    "rebalance_report": None,
-                    "compacted": False,
-                    "compaction_report": None,
-                    "retrained": False,
-                    "retrain_report": None,
-                    "skipped_replay": False,
-                    **delta,
-                }
-            )
+            log.append(_entry(b, **delta))
 
     return maintain, log
 
@@ -2424,16 +2049,8 @@ def rebalance_ivf_index(
     (the streaming maintainer advances them from append reports) skip
     the seed count — one fewer job on the hot mid-stream path.
     Writer mutual exclusion and ``__batch``-tag preservation: INDEX
-    COMMIT PROTOCOL, the module section above."""
-    _assert_no_uncommitted_delete(path)
-    _assert_no_uncommitted_retrain(path)
-    # refuse under an uncommitted APPEND intent too (round-8 ADVICE):
-    # the streaming maintainer only rebalances post-commit, but a
-    # direct-API rebalance after a crashed append would move the dead
-    # attempt's __batch-tagged rows out of the intent's touched
-    # partitions, so the replay repair would miss them and the
-    # re-append would duplicate rows
-    _assert_no_uncommitted_append(path)
+    COMMIT PROTOCOL in :mod:`.txnlog`."""
+    txn = txnlog.guard(path)
     lists = spark.read.parquet(path + "/lists")
     if sizes is None:
         sizes = _list_sizes(spark, path)  # bounded: one row per list
@@ -2487,7 +2104,7 @@ def rebalance_ivf_index(
         sub_ids = local_frame(spark, 
             sorted(subs.items()), "__list long, __cent array<double>"
         )
-        assigned = _assign_to_lists(
+        assigned = assign_to_lists(
             hot_rows, id_col, "__v", sub_ids, passthrough=("__batch",)
         ).localCheckpoint(eager=False)
         # ONE bounded job per hot list: child sizes + the incremental
@@ -2534,48 +2151,28 @@ def rebalance_ivf_index(
     moved = reassigned_parts[0]
     for p in reassigned_parts[1:]:
         moved = moved.unionByName(p)
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    old_mode = spark.conf.get(conf_key, "static")
-    spark.conf.set(conf_key, "dynamic")
-    try:
-        # PRESERVE each moved row's __batch tag: the CDC upsert
-        # replay path scopes its old-version delete by the tag of the
-        # batch being replayed, so re-tagging here would let a
-        # crashed-then-replayed upsert batch delete the very versions
-        # an in-batch rebalance had just moved (review finding, round
-        # 8).  Preserving tags is safe for the append replay repair
-        # too: a repair only ever targets a batch id NEWER than the
-        # committed high-water mark, and every moved row's tag is at
-        # or below it (the maintainer commits the batch before its
-        # rebalance runs).
-        moved.repartition("list_id").write.mode(
-            "overwrite"
-        ).partitionBy("list_id").parquet(path + "/lists")
-    finally:
-        spark.conf.set(conf_key, old_mode)
+    # PRESERVE each moved row's __batch tag: the CDC upsert replay
+    # path scopes its old-version delete by the tag of the batch being
+    # replayed, so re-tagging here would let a crashed-then-replayed
+    # upsert batch delete the very versions an in-batch rebalance had
+    # just moved (review finding, round 8).  Preserving tags is safe
+    # for the append replay repair too: a repair only ever targets a
+    # batch id NEWER than the committed high-water mark, and every
+    # moved row's tag is at or below it (the maintainer commits the
+    # batch before its rebalance runs).
+    moved.repartition("list_id").write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("list_id").parquet(path + "/lists")
 
     _write_centroids_sidecar(spark, path, sorted(cent_rows.items()))
 
     st = read_index_stats(spark, path)
     if st is not None:  # pre-sidecar index: nothing to update
         n, m = st
-        new_mean = (m * n + report["_cos_delta"]) / n
-        txn = (
-            _read_index_json(path, "txn.json") if _txn_possible(path) else None
+        txnlog.commit_stats(
+            path, n, (m * n + report["_cos_delta"]) / n,
+            partial(_write_stats_sidecar, spark, path), txn,
         )
-        if txn is not None:
-            # transactional index: the commit record is the stats
-            # authority (read_index_stats resolves it first), so the
-            # mid-stream rebalance updates it driver-side — zero jobs —
-            # and leaves the lagging /stats parquet to the next
-            # batch-mode writer
-            _write_index_json_atomic(
-                path,
-                "txn.json",
-                {**txn, "n": n, "mean_assigned_cos": new_mean},
-            )
-        else:
-            _write_stats_sidecar(spark, path, n, new_mean)
 
     report.pop("_cos_delta", None)
     report["max_share_after_ppm"] = (
@@ -2585,7 +2182,7 @@ def rebalance_ivf_index(
     return report
 
 
-def _ivf_list_files(path: str) -> tuple[dict, dict]:
+def ivf_list_files(path: str) -> tuple[dict, dict]:
     """Per-list ``({list_id: file count}, {list_id: bytes})`` for a
     persisted IVF index — a driver-side metadata scan (``os.scandir``),
     ZERO Spark jobs.  Local-filesystem only, the same contract as the
@@ -2593,7 +2190,7 @@ def _ivf_list_files(path: str) -> tuple[dict, dict]:
     table format's file-listing API."""
     import os
 
-    base = _txn_local_path(path, "lists")
+    base = txnlog.local_path(path, "lists")
     counts: dict = {}
     sizes: dict = {}
     for entry in os.scandir(base):
@@ -2656,21 +2253,19 @@ def compact_ivf_index(
     files_after, rows} — ``rows`` is the exact rewritten row count
     (from the checkpoint materialization, no extra job), letting
     callers assert conservation cheaply.  Writer mutual exclusion:
-    INDEX COMMIT PROTOCOL, the module section above."""
+    INDEX COMMIT PROTOCOL in :mod:`.txnlog`."""
     import math
 
-    if not _txn_possible(path):
+    if not txnlog.possible(path):
         raise ValueError(
             "compact_ivf_index's partition rewrite assumes a local "
             f"filesystem (got {path!r}) — use a table-format rewrite "
             "commit (Delta OPTIMIZE / Iceberg rewrite_data_files) on "
             "object stores"
         )
-    _assert_no_uncommitted_delete(path)
-    _assert_no_uncommitted_retrain(path)
-    _assert_no_uncommitted_append(path)
+    txnlog.guard(path)
 
-    counts, sizes = _ivf_list_files(path)
+    counts, sizes = ivf_list_files(path)
     hot = sorted(
         lid for lid, c in counts.items() if c > max_files_per_list
     )
@@ -2705,16 +2300,10 @@ def compact_ivf_index(
         # deletes the files this plan reads (rebalance/repair pattern)
     )
     report["rows"] = hot_df.count()  # served from the checkpoint
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    old_mode = spark.conf.get(conf_key, "static")
-    spark.conf.set(conf_key, "dynamic")
-    try:
-        hot_df.write.mode("overwrite").partitionBy("list_id").parquet(
-            path + "/lists"
-        )
-    finally:
-        spark.conf.set(conf_key, old_mode)
-    after, _ = _ivf_list_files(path)
+    hot_df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("list_id").parquet(path + "/lists")
+    after, _ = ivf_list_files(path)
     report["files_after"] = sum(after.values())
     return report
 
@@ -2761,26 +2350,24 @@ def retrain_ivf_index(
       whole; a crash before the intent leaves only garbage stage dirs
       the next retrain overwrites);
     * every other writer refuses under a live retrain intent
-      (:func:`_assert_no_uncommitted_retrain`), and retrain refuses
+      (:func:`txnlog.guard`), and retrain refuses
       under live append/delete intents — full mutual exclusion.
 
     At deployment scale the staged swap is REPLACE TABLE AS SELECT /
     ``rewrite_data_files`` on the table format; crash/resume rules:
-    INDEX COMMIT PROTOCOL, the module section above.
+    INDEX COMMIT PROTOCOL in :mod:`.txnlog`.
 
     ``n_centroids`` defaults to the index's current centroid count.
     Returns {n, n_centroids, mean_before, mean_after, resumed}
     (``mean_before`` is ``None`` on a resume — the pre-swap baseline
     is gone by then)."""
-    import os
-
-    if not _txn_possible(path):
+    if not txnlog.possible(path):
         raise ValueError(
             "retrain_ivf_index's staged swap assumes a local "
             f"filesystem (got {path!r}) — use REPLACE TABLE AS SELECT "
             "(Delta/Iceberg) on object stores"
         )
-    intent = _read_index_json(path, "retrain_intent.json")
+    intent = txnlog.read(path, txnlog.RETRAIN_INTENT)
     if intent is not None:
         # crashed mid-swap: the intent proves the stage was complete —
         # finish the swap with the intent's absolute stats
@@ -2788,8 +2375,7 @@ def retrain_ivf_index(
         rep["resumed"] = True
         rep["mean_before"] = None
         return rep
-    _assert_no_uncommitted_delete(path)
-    _assert_no_uncommitted_append(path)
+    txnlog.guard(path, owner=txnlog.RETRAIN_INTENT)
 
     st = read_index_stats(spark, path)
     mean_before = st[1] if st is not None else None
@@ -2811,23 +2397,18 @@ def retrain_ivf_index(
     cents = train_ivf_centroids(
         rows, "__v", n_centroids=k, iters=train_iters, seed=seed
     )
-    assigned = _assign_to_lists(
+    assigned = assign_to_lists(
         rows, id_col, "__v", cents, passthrough=("__batch",)
     ).localCheckpoint(eager=False)
-    root = path.removeprefix("file://")
-    import shutil
-
-    for name in ("lists_stage", "centroids_stage"):
-        # garbage from a retrain that crashed BEFORE its intent
-        shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+    txnlog.clear_stage(path)
     assigned.drop("__best_cos").repartition("list_id").write.mode(
         "overwrite"
-    ).partitionBy("list_id").parquet(path + "/lists_stage")
+    ).partitionBy("list_id").parquet(path + "/" + txnlog.stage("lists"))
     _write_centroids_sidecar(
         spark,
         path,
         [(int(r["__list"]), list(r["__cent"])) for r in cents.collect()],
-        name="centroids_stage",
+        name=txnlog.stage("centroids"),
     )
     agg = assigned.agg(
         F.count(F.lit(1)).alias("n"),
@@ -2839,7 +2420,7 @@ def retrain_ivf_index(
         "n_centroids": k,
     }
     # intent AFTER the stage is complete: from here the swap is owed
-    _write_index_json_atomic(path, "retrain_intent.json", intent)
+    txnlog.put(path, txnlog.RETRAIN_INTENT, intent)
     rep = _finish_retrain_swap(spark, path, intent)
     rep["resumed"] = False
     rep["mean_before"] = mean_before
@@ -2854,32 +2435,11 @@ def _finish_retrain_swap(spark, path: str, intent: dict) -> dict:
     stats records from the intent's ABSOLUTE numbers (idempotent
     rewrite; ``last_batch_id`` / ``last_cdc_batch_id`` carry over),
     remove the intent LAST, and drop the trash."""
-    import contextlib
-    import os
-    import shutil
-
-    root = path.removeprefix("file://")
-    for name in ("lists", "centroids"):
-        stage = os.path.join(root, name + "_stage")
-        live = os.path.join(root, name)
-        trash = os.path.join(root, name + "_trash")
-        if os.path.exists(stage):
-            if os.path.exists(live):
-                shutil.rmtree(trash, ignore_errors=True)
-                os.rename(live, trash)
-            os.rename(stage, live)
-        # else: a crashed attempt already swapped this sidecar in
+    txnlog.swap_staged(path)
     n, mean = int(intent["n"]), float(intent["mean_assigned_cos"])
-    _write_stats_sidecar(spark, path, n, mean)
-    txn = _read_index_json(path, "txn.json")
-    if txn is not None:
-        _write_index_json_atomic(
-            path, "txn.json", {**txn, "n": n, "mean_assigned_cos": mean}
-        )
-    with contextlib.suppress(FileNotFoundError):
-        os.remove(_txn_local_path(path, "retrain_intent.json"))
-    for name in ("lists_trash", "centroids_trash"):
-        shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+    txnlog.commit_stats(path, n, mean, partial(_write_stats_sidecar, spark, path))
+    txnlog.put(path, txnlog.RETRAIN_INTENT, None)
+    txnlog.drop_trash(path)
     return {
         "n": n,
         "n_centroids": int(intent["n_centroids"]),
@@ -2975,7 +2535,7 @@ def delete_from_ivf_index(
     (deletion vectors / positional deletes + the format's commit);
     this is that pattern on the local-fs JSON log the index already
     uses for exactly-once appends.  Commit/crash rules: INDEX COMMIT
-    PROTOCOL, the module section above.
+    PROTOCOL in :mod:`.txnlog`.
 
     ``exclude_batch`` scopes the delete to rows NOT written by the
     given ``__batch`` tag — the replay-safety hook the CDC upsert leg
@@ -2989,18 +2549,17 @@ def delete_from_ivf_index(
     import os
     import shutil
 
-    if not _txn_possible(path):
+    if not txnlog.possible(path):
         raise ValueError(
             "delete_from_ivf_index's partition rewrite assumes a local "
             f"filesystem (got {path!r}) — use a table-format DELETE "
             "(Delta deletion vectors / Iceberg positional deletes) on "
             "object stores"
         )
-    _assert_no_uncommitted_retrain(path)
-    txn = _assert_no_uncommitted_append(path)
+    txn = txnlog.guard(path, owner=txnlog.DELETE_INTENT)
 
     digest = _delete_ids_digest(ids, exclude_batch)
-    live = _read_index_json(path, "del_intent.json")
+    live = txnlog.read(path, txnlog.DELETE_INTENT)
     resumed = False
     if live is not None:
         if live["digest"] != digest:
@@ -3068,7 +2627,7 @@ def delete_from_ivf_index(
         # n_centroids rows) so the stats fold can subtract exactly what
         # the build/append folds added
         cents = F.broadcast(
-            _centroids_df(spark, path).select(
+            centroids_df(spark, path).select(
                 F.col("__list").alias("list_id"), F.col("__cent")
             )
         )
@@ -3118,9 +2677,9 @@ def delete_from_ivf_index(
         post_mean = (
             (pre_mean * pre_n - d_mean * d_n) / post_n if post_n else 0.0
         )
-        _write_index_json_atomic(
+        txnlog.put(
             path,
-            "del_intent.json",
+            txnlog.DELETE_INTENT,
             {
                 "digest": digest,
                 "affected": affected,
@@ -3148,9 +2707,7 @@ def delete_from_ivf_index(
         # overhead (r11, guide §1.2).  ONLY valid pre-crash: a RESUME
         # may find partitions the dead attempt already rewrote (their
         # hits are gone from disk), so it keeps the recount below.
-        import pyarrow.parquet as pq
-
-        lists_base = _txn_local_path(path, "lists")
+        lists_base = txnlog.local_path(path, "lists")
         counts = {}
         for lid in affected:
             d = os.path.join(lists_base, f"list_id={lid}")
@@ -3158,7 +2715,7 @@ def delete_from_ivf_index(
             if os.path.isdir(d):
                 for f in os.scandir(d):
                     if f.is_file() and not f.name.startswith(("_", ".")):
-                        on_disk += pq.ParquetFile(f.path).metadata.num_rows
+                        on_disk += _footer_rows(f.path)
             counts[lid] = on_disk - list_counts.get(lid, 0)
             if counts[lid] < 0:
                 raise RuntimeError(
@@ -3176,21 +2733,15 @@ def delete_from_ivf_index(
     nonempty = [lid for lid in affected if counts.get(lid, 0) > 0]
     dropped = [lid for lid in affected if counts.get(lid, 0) == 0]
     if nonempty:
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        old_mode = spark.conf.get(conf_key, "static")
-        spark.conf.set(conf_key, "dynamic")
-        try:
-            kept.filter(F.col("list_id").isin(nonempty)).repartition(
-                "list_id"
-            ).write.mode("overwrite").partitionBy("list_id").parquet(
-                path + "/lists"
-            )
-        finally:
-            spark.conf.set(conf_key, old_mode)
-    local_lists = _txn_local_path(path, "lists")
+        kept.filter(F.col("list_id").isin(nonempty)).repartition(
+            "list_id"
+        ).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("list_id").parquet(path + "/lists")
+    local_lists = txnlog.local_path(path, "lists")
     for lid in dropped:
         # dynamic overwrite cannot write an empty partition: drop the
-        # dir (local-fs contract, see the txn module note)
+        # dir (local-fs contract, see txnlog)
         shutil.rmtree(
             os.path.join(local_lists, f"list_id={lid}"), ignore_errors=True
         )
@@ -3198,17 +2749,10 @@ def delete_from_ivf_index(
     # COMMIT: absolute post-delete stats from the intent (idempotent —
     # a crash after any partial commit step re-writes the same
     # values), lockstep across both records, intent removed last
-    _write_stats_sidecar(spark, path, post_n, post_mean)
-    if txn is not None:
-        _write_index_json_atomic(
-            path,
-            "txn.json",
-            {**txn, "n": post_n, "mean_assigned_cos": post_mean},
-        )
-    import contextlib
-
-    with contextlib.suppress(FileNotFoundError):
-        os.remove(_txn_local_path(path, "del_intent.json"))
+    txnlog.commit_stats(
+        path, post_n, post_mean, partial(_write_stats_sidecar, spark, path), txn
+    )
+    txnlog.put(path, txnlog.DELETE_INTENT, None)
     return {
         "n_deleted": d_n,
         "affected_list_ids": affected,
@@ -3243,15 +2787,8 @@ def _upsert_phase1(
     ids, the retry's phase 1 deletes them along with any standing old
     versions, and phase 2 re-appends the batch whole."""
     if batch_id is not None:
-        app_intent = _read_index_json(path, "txn_intent.json")
-        committed = (
-            int(txn.get("last_batch_id", -1)) if txn is not None else -1
-        )
-        if (
-            app_intent is not None
-            and int(app_intent["batch_id"]) == int(batch_id)
-            and int(app_intent["batch_id"]) > committed
-        ):
+        live = txnlog.live_append(path, txn)
+        if live is not None and int(live["batch_id"]) == int(batch_id):
             return None
     return delete_from_ivf_index(
         spark, path, ids, id_col=id_col, exclude_batch=batch_id
@@ -3306,10 +2843,9 @@ def upsert_ivf_index(
 
     Returns {n_rows, n_replaced, delete_report (``None`` when phase 1
     was skipped on a replay), append_report, skipped_replay}.
-    Commit/crash rules: INDEX COMMIT PROTOCOL, the module section
-    above."""
+    Commit/crash rules: INDEX COMMIT PROTOCOL in :mod:`.txnlog`."""
     spark = new_batch.sparkSession
-    txn = _read_index_json(path, "txn.json") if _txn_possible(path) else None
+    txn = txnlog.read(path, txnlog.COMMIT) if txnlog.possible(path) else None
     if (
         batch_id is not None
         and txn is not None
@@ -3424,7 +2960,7 @@ def ivf_topk_indexed(
         probed = sorted({lid for _, _, lid in assigned_rows})
     else:
         cents = F.broadcast(
-            _centroids_df(spark, path).select(
+            centroids_df(spark, path).select(
                 F.col("__list").alias("__cent_id"), F.col("__cent")
             )
         )

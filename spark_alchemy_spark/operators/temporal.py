@@ -599,6 +599,12 @@ def longest_streak_bucketed(
         an, bn = pd.isna(a), pd.isna(b)
         return (an and bn) or (not an and not bn and a == b)
 
+    # the summary columns _merge_rows folds, in its unpack order
+    fold_cols = (
+        "n_rows", "n_runs", "p_v", "p_len", "s_v", "s_len", "s_t", "s_e",
+        "b_len", "b_v", "b_t", "b_e",
+    )
+
     def _merge_rows(rows) -> tuple:
         """Fold one key's bucket summaries (bucket order) → (best_type,
         best_streak, n_rows).  The exact per-key fold the grouped
@@ -619,20 +625,23 @@ def longest_streak_bucketed(
 
         carry = None
         total = 0
-        for row in rows:
-            total += int(row.n_rows)
+        for (
+            n_rows, n_runs, p_v, p_len, s_v, s_len, s_t, s_e,
+            b_len, b_v, b_t, b_e,
+        ) in rows:
+            total += int(n_rows)
             joined = None
-            if carry is not None and _eq(carry[3], row.p_v):
-                joined = (carry[0] + int(row.p_len), carry[1], carry[2], carry[3])
+            if carry is not None and _eq(carry[3], p_v):
+                joined = (carry[0] + int(p_len), carry[1], carry[2], carry[3])
             else:
                 candidate(carry)
-            candidate((int(row.b_len), int(row.b_t), int(row.b_e), row.b_v))
-            if joined is not None and int(row.n_runs) == 1:
+            candidate((int(b_len), int(b_t), int(b_e), b_v))
+            if joined is not None and int(n_runs) == 1:
                 carry = joined  # whole bucket is one run: keep chaining
                 continue
             if joined is not None:
                 candidate(joined)
-            carry = (int(row.s_len), int(row.s_t), int(row.s_e), row.s_v)
+            carry = (int(s_len), int(s_t), int(s_e), s_v)
         candidate(carry)
         bt = best[3]
         if pd.isna(bt):
@@ -658,9 +667,14 @@ def longest_streak_bucketed(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            # positional access: the key need not be a Python
+            # identifier (itertuples renames such fields, and a name
+            # like ``_1`` would read the wrong one)
+            ki = pdf.columns.get_loc(key)
+            fold_ix = [pdf.columns.get_loc(c) for c in fold_cols]
             out_k, out_t, out_b, out_n = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                kv = getattr(row, key)
+            for row in pdf.itertuples(index=False, name=None):
+                kv = row[ki]
                 if started and not _eq(kv, cur_key):
                     bt, bs, tot = _merge_rows(cur_rows)
                     out_k.append(cur_key)
@@ -669,7 +683,7 @@ def longest_streak_bucketed(
                     out_n.append(tot)
                     cur_rows = []
                 cur_key, started = kv, True
-                cur_rows.append(row)
+                cur_rows.append([row[i] for i in fold_ix])
             if out_k:
                 yield pd.DataFrame(
                     {

@@ -249,7 +249,7 @@ def ann_ivf_compaction(spark, sf_dir):
     import tempfile
 
     from .operators.similarity import (
-        _ivf_list_files,
+        ivf_list_files,
         append_ivf_index,
         compact_ivf_index,
         ivf_topk_indexed,
@@ -289,7 +289,7 @@ def ann_ivf_compaction(spark, sf_dir):
             )
         append_ivf_index(sl, "vec_id", "embedding", idx_path)
 
-    before, _ = _ivf_list_files(idx_path)
+    before, _ = ivf_list_files(idx_path)
     hot_expected = sorted(lid for lid, c in before.items() if c > 2)
     rep = compact_ivf_index(spark, idx_path, max_files_per_list=2)
 
@@ -584,8 +584,8 @@ def ann_ivf_delete(spark, sf_dir):
     import tempfile
 
     from .operators.similarity import (
-        _assign_to_lists,
-        _centroids_df,
+        assign_to_lists,
+        centroids_df,
         append_ivf_index,
         delete_from_ivf_index,
         ivf_topk_indexed,
@@ -656,10 +656,10 @@ def ann_ivf_delete(spark, sf_dir):
 
     lists = spark.read.parquet(idx_path + "/lists")
     stats_n, stats_mean = read_index_stats(spark, idx_path)
-    cents = _centroids_df(spark, idx_path)
+    cents = centroids_df(spark, idx_path)
     # ONE verify pass instead of two (r11, guide §1.2: the checks
     # stay, the actions merge): raw count + deleted-id hits ride the
-    # rescore scan as observed metrics (pre-collapse — _assign_to_lists
+    # rescore scan as observed metrics (pre-collapse — assign_to_lists
     # groups by id, so these must be measured on the RAW rows), and the
     # distinct-id count is the rescore's own row count (count of
     # non-null ids over one-row-per-distinct-id output == the old
@@ -673,7 +673,7 @@ def ann_ivf_delete(spark, sf_dir):
 
     def _verify():
         return (
-            _assign_to_lists(
+            assign_to_lists(
                 lists.observe(
                     obs,
                     F.count(F.lit(1)).alias("n"),
@@ -791,8 +791,8 @@ def stream_ivf_cdc(spark, sf_dir):
     import os
     import tempfile
 
+    from .operators import txnlog
     from .operators.similarity import (
-        _read_index_json,
         make_streaming_ivf_maintainer,
         read_index_stats,
     )
@@ -914,7 +914,7 @@ def stream_ivf_cdc(spark, sf_dir):
     )
     ucheck = {"n": int(conserve["un"]), "ok": int(conserve["uok"])}
     stats_n = read_index_stats(spark, idx_path)[0]
-    txn = _read_index_json(idx_path, "txn.json")
+    txn = txnlog.read(idx_path, txnlog.COMMIT)
     return local_frame(spark, 
         [
             (

@@ -271,8 +271,8 @@ def ann_ivf_upsert(spark, sf_dir):
     import tempfile
 
     from .operators.similarity import (
-        _assign_to_lists,
-        _centroids_df,
+        assign_to_lists,
+        centroids_df,
         read_index_stats,
         upsert_ivf_index,
     )
@@ -351,7 +351,7 @@ def ann_ivf_upsert(spark, sf_dir):
         )
     )
     stats_n, stats_mean = read_index_stats(spark, idx_path)
-    cents = _centroids_df(spark, idx_path)
+    cents = centroids_df(spark, idx_path)
     # ONE verify pass (r11, guide §1.2): the replacement checks and the
     # raw count ride the rescore scan as observed metrics on the joined
     # rows (the broadcast left join keeps lists 1:1 — standing ids are
@@ -362,7 +362,7 @@ def ann_ivf_upsert(spark, sf_dir):
 
     obs = Observation()
     rescored = (
-        _assign_to_lists(
+        assign_to_lists(
             lists.join(want, "vec_id", "left").observe(
                 obs,
                 F.count(F.lit(1)).alias("n"),
@@ -462,8 +462,8 @@ def ann_ivf_retrain(spark, sf_dir):
     import tempfile
 
     from .operators.similarity import (
-        _assign_to_lists,
-        _centroids_df,
+        assign_to_lists,
+        centroids_df,
         append_ivf_index,
         read_index_stats,
         retrain_ivf_index,
@@ -497,18 +497,18 @@ def ann_ivf_retrain(spark, sf_dir):
 
     lists = spark.read.parquet(idx_path + "/lists")
     stats_n, stats_mean = read_index_stats(spark, idx_path)
-    cents = _centroids_df(spark, idx_path)
+    cents = centroids_df(spark, idx_path)
     # ONE verify pass (r11, guide §1.2): the raw row count rides the
     # rescore scan as an observed metric (pre-collapse), and the
     # distinct-id count is the rescore output's own non-null-id count
-    # (_assign_to_lists groups by id — same value as the old
+    # (assign_to_lists groups by id — same value as the old
     # countDistinct, no expand plan).  Mean unchanged: same rows, same
     # expression.
     from pyspark.sql import Observation
 
     obs = Observation()
     rescored = (
-        _assign_to_lists(
+        assign_to_lists(
             lists.observe(obs, F.count(F.lit(1)).alias("n")),
             "vec_id",
             "__v",
@@ -582,8 +582,8 @@ def stream_ivf_drift_retrain(spark, sf_dir):
     import os
     import tempfile
 
+    from .operators import txnlog
     from .operators.similarity import (
-        _read_index_json,
         make_streaming_ivf_maintainer,
         read_index_stats,
     )
@@ -672,7 +672,7 @@ def stream_ivf_drift_retrain(spark, sf_dir):
                 and int(conserve["nid"]) == n_expected
                 and stats_n == n_expected,
                 int(
-                    _read_index_json(idx_path, "txn.json")["last_batch_id"]
+                    txnlog.read(idx_path, txnlog.COMMIT)["last_batch_id"]
                 ) == 2,
                 all(p["stateOperators"] == [] for p in progress),
             )

@@ -550,7 +550,7 @@ def semantic_dedup_at_ingest(
     Returns the per-language totals (lang, n_arrived, n_dropped,
     n_survived) aggregated across batches — replay-order free."""
     from ..operators.dedup import cosine_similarity, doc_hash_embeddings
-    from ..operators.similarity import _assign_to_lists, train_ivf_centroids
+    from ..operators.similarity import assign_to_lists, train_ivf_centroids
 
     spark = standing_docs.sparkSession
     nprobe = n_centroids if nprobe is None else nprobe
@@ -563,7 +563,7 @@ def semantic_dedup_at_ingest(
     # tie-break as the batch index build/append — one definition, so a
     # tie-break or zero-norm fix there reaches the stream too)
     index = (
-        _assign_to_lists(emb, id_col, "vec", cents)
+        assign_to_lists(emb, id_col, "vec", cents)
         .select(
             F.col("list_id").alias("__list"),
             F.col(id_col).alias("__sid"),

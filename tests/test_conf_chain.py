@@ -62,31 +62,34 @@ def test_docs_battery_count_in_sync():
 
 def test_index_commit_protocol_doc_is_authoritative():
     """The index commit protocol lives ONCE, in the INDEX COMMIT
-    PROTOCOL module section of operators/similarity.py (VERDICT r8
-    task 7); it must name every record type and every lifecycle leg,
-    and the lifecycle docstrings must REFERENCE it rather than restate
-    it (pinned by requiring one pointer per leg)."""
+    PROTOCOL module docstring of operators/txnlog.py (the module that
+    owns the records); it must name every record type and every
+    lifecycle leg, and the lifecycle docstrings of
+    operators/similarity.py must REFERENCE it rather than restate it
+    (pinned by requiring one pointer per leg)."""
     import os
     import re
 
     import spark_alchemy_spark.operators.similarity as sim
+    import spark_alchemy_spark.operators.txnlog as txnlog
 
     src = open(os.path.abspath(sim.__file__)).read()
-    refs = re.findall(r"INDEX\s+COMMIT\s+PROTOCOL", src)
-    # 1 section header + >= 6 docstring pointers (append, delete,
-    # compact, rebalance, maintainer, upsert); pointers may line-wrap
-    assert len(refs) >= 7, (
-        f"expected >= 7 INDEX COMMIT PROTOCOL references, "
-        f"found {len(refs)}"
+    refs = re.findall(r"INDEX\s+COMMIT\s+PROTOCOL\s+in\s+:mod:`\.txnlog`", src)
+    # >= 8 docstring pointers (fused append, append, maintainer,
+    # rebalance, compact, retrain, delete, upsert); pointers may
+    # line-wrap
+    assert len(refs) >= 8, (
+        f"expected >= 8 INDEX COMMIT PROTOCOL pointers, found {len(refs)}"
     )
-    # the section itself (up to the sentinel that follows the block)
-    section = src.split("INDEX COMMIT PROTOCOL", 1)[1].split("_BASE_BATCH")[0]
+    section = txnlog.__doc__
+    assert "INDEX COMMIT PROTOCOL" in section
     for token in (
         "txn.json",
         "txn_intent.json",
         "del_intent.json",
         "retrain_intent.json",
         "probe_txn.json",
+        "iso_txn.json",
         "build:",
         "append(batch_id)",
         "delete:",

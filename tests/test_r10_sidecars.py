@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_alchemy_spark.operators.similarity import (
-    _centroids_df,
+    centroids_df,
     _list_sizes,
     _read_centroids_rows,
     _write_centroids_sidecar,
@@ -74,7 +74,7 @@ def test_centroids_pyarrow_equals_spark_read(spark, idx):
     assert rows == via_spark  # bit-exact doubles, same ids, same order
     df_rows = sorted(
         (int(r["__list"]), list(r["__cent"]))
-        for r in _centroids_df(spark, idx).collect()
+        for r in centroids_df(spark, idx).collect()
     )
     assert df_rows == via_spark
 

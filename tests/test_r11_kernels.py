@@ -20,6 +20,8 @@ Pins the behaviors the r11 changes introduced:
 import pytest
 from pyspark.sql import functions as F
 
+from spark_alchemy_spark.operators import txnlog
+
 
 def test_brute_force_topk_query_cap_fails_loudly(spark):
     from spark_alchemy_spark.operators.similarity import (
@@ -217,8 +219,6 @@ def test_fused_streaming_append_slim_intent_replay(spark, tmp_path):
     import os
 
     from spark_alchemy_spark.operators.similarity import (
-        _read_index_json,
-        _write_index_json_atomic,
         append_ivf_index,
         build_ivf_index,
     )
@@ -230,7 +230,7 @@ def test_fused_streaming_append_slim_intent_replay(spark, tmp_path):
         _batch_r11(spark, 10, 50_000), "vec_id", "embedding", path, batch_id=0
     )
     assert rep0["n_appended"] == 10
-    txn0 = _read_index_json(path, "txn.json")
+    txn0 = txnlog.read(path, txnlog.COMMIT)
     assert txn0["last_batch_id"] == 0 and txn0["n"] == 110
 
     # run batch 1 for real (fused path: slim intent written + removed
@@ -239,8 +239,8 @@ def test_fused_streaming_append_slim_intent_replay(spark, tmp_path):
     b1 = _batch_r11(spark, 8, 60_000, axis=1)
     rep1 = append_ivf_index(b1, "vec_id", "embedding", path, batch_id=1)
     assert rep1["n_appended"] == 8 and rep1["list_counts"]
-    _write_index_json_atomic(path, "txn.json", txn0)
-    _write_index_json_atomic(path, "txn_intent.json", {"batch_id": 1})
+    txnlog.put(path, txnlog.COMMIT, txn0)
+    txnlog.put(path, txnlog.APPEND_INTENT, {"batch_id": 1})
     pre = spark.read.parquet(path + "/lists").count()
     assert pre == 118  # orphaned tagged rows visible pre-repair
 
@@ -252,7 +252,7 @@ def test_fused_streaming_append_slim_intent_replay(spark, tmp_path):
     txn1 = json.load(open(os.path.join(path, "txn.json")))
     assert txn1["last_batch_id"] == 1 and txn1["n"] == 118
     # intent cleared by the commit path (replaced then superseded)
-    intent = _read_index_json(path, "txn_intent.json")
+    intent = txnlog.read(path, txnlog.APPEND_INTENT)
     assert intent is None or int(intent["batch_id"]) <= 1
 
     # replay of a COMMITTED batch is still a no-op
@@ -266,7 +266,6 @@ def test_fused_streaming_append_empty_batch_clears_intent(spark, tmp_path):
     would trip the NEXT batch's out-of-order guard) and must not
     advance the commit record."""
     from spark_alchemy_spark.operators.similarity import (
-        _read_index_json,
         append_ivf_index,
         build_ivf_index,
     )
@@ -280,14 +279,102 @@ def test_fused_streaming_append_empty_batch_clears_intent(spark, tmp_path):
     empty = _batch_r11(spark, 4, 60_000).filter("vec_id < 0")
     rep = append_ivf_index(empty, "vec_id", "embedding", path, batch_id=1)
     assert rep["n_appended"] == 0 and rep["skipped_replay"] is False
-    assert _read_index_json(path, "txn_intent.json") is None
-    assert _read_index_json(path, "txn.json")["last_batch_id"] == 0
+    assert txnlog.read(path, txnlog.APPEND_INTENT) is None
+    assert txnlog.read(path, txnlog.COMMIT)["last_batch_id"] == 0
     # and the next real batch proceeds cleanly
     rep2 = append_ivf_index(
         _batch_r11(spark, 3, 70_000), "vec_id", "embedding", path, batch_id=2
     )
     assert rep2["n_appended"] == 3
 
+
+
+def test_fused_batch_append_footer_mismatch_names_added_files(
+    spark, tmp_path, monkeypatch
+):
+    """A batch-mode fused append whose footer recount disagrees with
+    the write job's observed count has no intent to repair from: the
+    error must name the exact files the attempt added, and the stats
+    records must still describe the committed index."""
+    import os
+
+    import spark_alchemy_spark.operators.similarity as sim
+
+    df = _mk_clusters_r11(spark)
+    path = str(tmp_path / "idx")
+    sim.build_ivf_index(df, "vec_id", "embedding", path, n_centroids=4)
+    before = {
+        os.path.join(d, f)
+        for d, _, fs in os.walk(os.path.join(path, "lists"))
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    st = sim.read_index_stats(spark, path)
+    real = sim._footer_rows
+    monkeypatch.setattr(sim, "_footer_rows", lambda f: real(f) + 1)
+    with pytest.raises(RuntimeError, match="second writer") as err:
+        sim.append_ivf_index(
+            _batch_r11(spark, 6, 50_000), "vec_id", "embedding", path
+        )
+    added = {
+        os.path.join(d, f)
+        for d, _, fs in os.walk(os.path.join(path, "lists"))
+        for f in fs
+        if f.endswith(".parquet")
+    } - before
+    assert added
+    msg = str(err.value)
+    assert "still describe the committed index" in msg
+    for f in added:
+        assert f in msg
+    assert sim.read_index_stats(spark, path) == st
+
+
+def test_topk_centroid_assign_empty_corpus(spark):
+    """An empty corpus trains no centroids; assigning against the empty
+    centroid set (DataFrame or driver rows) is the empty frame with the
+    assignment schema, not an unpacking error."""
+    from spark_alchemy_spark.operators.dedup import topk_centroid_assign
+    from spark_alchemy_spark.operators.similarity import train_ivf_centroids
+
+    empty = spark.createDataFrame([], "__id long, __v array<double>")
+    cents = train_ivf_centroids(empty, "__v", n_centroids=4)
+    for c, keep_vec, cols in (
+        (cents, False, ["__id", "__list", "__rk"]),
+        ([], True, ["__id", "__v", "__list", "__rk"]),
+    ):
+        out = topk_centroid_assign(empty, "__id", "__v", c, 2, keep_vec=keep_vec)
+        assert out.columns == cols
+        assert out.collect() == []
+
+
+@pytest.mark.parametrize("key", ["user id", "_1"])
+def test_longest_streak_bucketed_any_key_name(spark, key):
+    """The partition fold reads the key by position, so a key column
+    whose name is not a Python identifier (or collides with
+    itertuples' positional renaming) folds like any other."""
+    from spark_alchemy_spark.operators.temporal import longest_streak_bucketed
+
+    rows = [
+        (u, "ab"[(t // (u % 3 + 1)) % 2], t, t)
+        for u in range(6)
+        for t in range(10)
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id long, event_type string, ts long, event_id long"
+    )
+
+    def run(frame, k):
+        return sorted(
+            tuple(r)
+            for r in longest_streak_bucketed(
+                frame, k, "event_type", "ts", "event_id",
+                bucket=(F.col("ts") / F.lit(4)).cast("long"),
+            ).collect()
+        )
+
+    want = run(df, "user_id")
+    assert run(df.withColumnRenamed("user_id", key), key) == want
 
 def test_exact_percentiles_matches_percentile(spark):
     """The codegen histogram twin must be bit-identical to Spark's

@@ -21,8 +21,8 @@ from pyspark.sql import functions as F
 
 from spark_alchemy_spark.localframe import local_frame
 from spark_alchemy_spark.operators.similarity import (
-    _assign_to_lists,
-    _centroids_df,
+    assign_to_lists,
+    centroids_df,
     append_ivf_index,
     build_ivf_index,
     read_index_stats,
@@ -117,9 +117,9 @@ def test_fused_batch_append_report_matches_recount(spark, fused_idx):
     assert sum(rep["list_counts"].values()) == 30
 
     # batch_mean must equal an independent Spark rescore of the batch
-    cents = _centroids_df(spark, path)
+    cents = centroids_df(spark, path)
     m = (
-        _assign_to_lists(batch, "vec_id", "embedding", cents)
+        assign_to_lists(batch, "vec_id", "embedding", cents)
         .agg(F.avg("__best_cos").alias("m"))
         .collect()[0]["m"]
     )

@@ -8,8 +8,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from spark_alchemy_spark.operators import txnlog
 from spark_alchemy_spark.operators.similarity import (
-    _read_index_json,
     append_ivf_index,
     build_ivf_index,
     make_streaming_ivf_maintainer,
@@ -67,7 +67,7 @@ def test_cdc_membership_and_marker(spark, tmp_path):
     assert _ids(spark, path) == want
     n, _ = read_index_stats(spark, path)
     assert n == len(want)
-    txn = _read_index_json(path, "txn.json")
+    txn = txnlog.read(path, txnlog.COMMIT)
     assert int(txn["last_cdc_batch_id"]) == 2
     assert int(txn["n"]) == len(want)
     assert [e["n_deleted"] for e in log] == [0, 4, 2]
@@ -109,7 +109,7 @@ def test_cdc_resumes_after_crash_before_marker(spark, tmp_path):
     append_ivf_index(
         _mk_corpus(spark, 100, 120), "vec_id", "embedding", path, batch_id=0
     )
-    assert "last_cdc_batch_id" not in _read_index_json(path, "txn.json")
+    assert "last_cdc_batch_id" not in txnlog.read(path, txnlog.COMMIT)
     maintain, log = make_streaming_ivf_maintainer(
         spark, path, id_col="vec_id", vec_col="embedding", op_col="op"
     )
@@ -120,7 +120,7 @@ def test_cdc_resumes_after_crash_before_marker(spark, tmp_path):
     want = (set(range(40)) | set(range(100, 120))) - {7, 105}
     assert _ids(spark, path) == want
     assert read_index_stats(spark, path)[0] == len(want)
-    assert int(_read_index_json(path, "txn.json")["last_cdc_batch_id"]) == 0
+    assert int(txnlog.read(path, txnlog.COMMIT)["last_cdc_batch_id"]) == 0
     assert log[-1]["skipped_replay"] is True  # the INSERT leg skipped
     assert log[-1]["n_deleted"] == 2  # ...but the deletes applied
 
@@ -284,13 +284,13 @@ def test_cdc_upsert_replay_after_insert_commit_keeps_new_version(
     append_ivf_index(
         b0.drop("op"), "vec_id", "embedding", path, batch_id=0
     )
-    assert "last_cdc_batch_id" not in _read_index_json(path, "txn.json")
+    assert "last_cdc_batch_id" not in txnlog.read(path, txnlog.COMMIT)
     # restart: fresh maintainer replays batch 0
     maintain, log = make_streaming_ivf_maintainer(
         spark, path, id_col="vec_id", vec_col="embedding", op_col="op"
     )
     maintain(b0, 0)
-    assert int(_read_index_json(path, "txn.json")["last_cdc_batch_id"]) == 0
+    assert int(txnlog.read(path, txnlog.COMMIT)["last_cdc_batch_id"]) == 0
     lists = spark.read.parquet(path + "/lists")
     assert _ids(spark, path) == set(range(60))
     assert lists.count() == 60  # new versions kept, old ones gone
@@ -311,7 +311,6 @@ def test_cdc_phase3_intent_replay_skips_to_phase3(spark, tmp_path):
     the digest guard) — it resumes phase 3 and lands the marker."""
     from spark_alchemy_spark.operators.similarity import (
         _delete_ids_digest,
-        _write_index_json_atomic,
         delete_from_ivf_index,
     )
 
@@ -337,9 +336,9 @@ def test_cdc_phase3_intent_replay_skips_to_phase3(spark, tmp_path):
         batch_id=0,
     )
     want = delete_from_ivf_index(spark, twin, [7, 11])
-    _write_index_json_atomic(
+    txnlog.put(
         path,
-        "del_intent.json",
+        txnlog.DELETE_INTENT,
         {
             "digest": _delete_ids_digest([7, 11]),
             "affected": want["affected_list_ids"],
@@ -361,7 +360,7 @@ def test_cdc_phase3_intent_replay_skips_to_phase3(spark, tmp_path):
     assert read_index_stats(spark, path) == (
         want["n_after"], want["mean_after"],
     )
-    assert int(_read_index_json(path, "txn.json")["last_cdc_batch_id"]) == 0
+    assert int(txnlog.read(path, txnlog.COMMIT)["last_cdc_batch_id"]) == 0
 
 
 def test_cdc_upsert_replay_after_crash_mid_append(spark, tmp_path, monkeypatch):
@@ -371,8 +370,6 @@ def test_cdc_upsert_replay_after_crash_mid_append(spark, tmp_path, monkeypatch):
     live append intent would make the delete refuse — permanently
     wedging the stream); it must let phase 2's repair clear the
     intent, re-append, and complete the batch."""
-    import spark_alchemy_spark.operators.similarity as sim
-
     path = str(tmp_path / "idx")
     build_ivf_index(
         _mk_corpus(spark, 0, 60), "vec_id", "embedding", path, n_centroids=4
@@ -389,16 +386,16 @@ def test_cdc_upsert_replay_after_crash_mid_append(spark, tmp_path, monkeypatch):
 
     # inject a crash on the FIRST append commit (txn.json write) —
     # after phase 1's delete and phase 2's intent + rows landed
-    orig = sim._write_index_json_atomic
+    orig = txnlog.put
     crashed = []
 
     def crashing(p, name, obj):
-        if name == "txn.json" and not crashed:
+        if name == txnlog.COMMIT and not crashed:
             crashed.append(1)
             raise RuntimeError("injected crash before append commit")
         return orig(p, name, obj)
 
-    monkeypatch.setattr(sim, "_write_index_json_atomic", crashing)
+    monkeypatch.setattr(txnlog, "put", crashing)
     m1, _ = make_streaming_ivf_maintainer(
         spark, path, id_col="vec_id", vec_col="embedding", op_col="op"
     )
@@ -407,16 +404,16 @@ def test_cdc_upsert_replay_after_crash_mid_append(spark, tmp_path, monkeypatch):
     with _pytest.raises(RuntimeError, match="injected crash"):
         m1(b0, 0)
     assert crashed  # the crash really landed mid-phase-2
-    intent = _read_index_json(path, "txn_intent.json")
+    intent = txnlog.read(path, txnlog.APPEND_INTENT)
     assert intent is not None and int(intent["batch_id"]) == 0
 
     # restart: fresh maintainer, same batch — must complete, not wedge
-    monkeypatch.setattr(sim, "_write_index_json_atomic", orig)
+    monkeypatch.setattr(txnlog, "put", orig)
     m2, log2 = make_streaming_ivf_maintainer(
         spark, path, id_col="vec_id", vec_col="embedding", op_col="op"
     )
     m2(b0, 0)
-    assert int(_read_index_json(path, "txn.json")["last_cdc_batch_id"]) == 0
+    assert int(txnlog.read(path, txnlog.COMMIT)["last_cdc_batch_id"]) == 0
     lists = spark.read.parquet(path + "/lists")
     tw = spark.read.parquet(twin + "/lists")
     assert sorted(

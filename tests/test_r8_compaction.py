@@ -11,6 +11,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from spark_alchemy_spark.operators import txnlog
+
 from tests.test_r8_recovery import _batch, _mk_clusters
 
 
@@ -29,9 +31,9 @@ def _lists_fingerprint(spark, path):
 
 
 def _file_counts(path):
-    from spark_alchemy_spark.operators.similarity import _ivf_list_files
+    from spark_alchemy_spark.operators.similarity import ivf_list_files
 
-    return _ivf_list_files(path)[0]
+    return ivf_list_files(path)[0]
 
 
 def test_compact_reduces_files_and_preserves_everything(spark, tmp_path):
@@ -114,7 +116,6 @@ def test_compact_refuses_uncommitted_intent(spark, tmp_path):
     replay repair; compacting under it would be a second writer on the
     same partitions — fail loud."""
     from spark_alchemy_spark.operators.similarity import (
-        _write_index_json_atomic,
         build_ivf_index,
         compact_ivf_index,
     )
@@ -122,8 +123,8 @@ def test_compact_refuses_uncommitted_intent(spark, tmp_path):
     df = _mk_clusters(spark)
     path = str(tmp_path / "idx")
     build_ivf_index(df, "vec_id", "embedding", path, n_centroids=4)
-    _write_index_json_atomic(
-        path, "txn_intent.json", {"batch_id": 0, "touched": []}
+    txnlog.put(
+        path, txnlog.APPEND_INTENT, {"batch_id": 0, "touched": []}
     )
     with pytest.raises(RuntimeError, match="uncommitted append intent"):
         compact_ivf_index(spark, path, max_files_per_list=1)

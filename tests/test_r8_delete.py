@@ -12,12 +12,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from spark_alchemy_spark.operators import txnlog
 from spark_alchemy_spark.operators.similarity import (
-    _assign_to_lists,
+    assign_to_lists,
     _delete_ids_digest,
-    _read_index_json,
-    _txn_local_path,
-    _write_index_json_atomic,
     append_ivf_index,
     build_ivf_index,
     compact_ivf_index,
@@ -77,7 +75,7 @@ def test_delete_reduces_and_preserves(spark, tmp_path):
     n1, m1 = read_index_stats(spark, path)
     cents = spark.read.parquet(path + "/centroids")
     rec = (
-        _assign_to_lists(lists, "vec_id", "__v", cents)
+        assign_to_lists(lists, "vec_id", "__v", cents)
         .agg(F.avg("__best_cos"))
         .collect()[0][0]
     )
@@ -145,10 +143,10 @@ def test_delete_keeps_txn_record_in_lockstep(spark, tmp_path):
         corpus.filter("vec_id >= 80"), "vec_id", "embedding", path,
         batch_id=0,
     )
-    txn0 = _read_index_json(path, "txn.json")
+    txn0 = txnlog.read(path, txnlog.COMMIT)
     assert txn0 is not None and int(txn0["last_batch_id"]) == 0
     rep = delete_from_ivf_index(spark, path, list(range(0, 120, 11)))
-    txn1 = _read_index_json(path, "txn.json")
+    txn1 = txnlog.read(path, txnlog.COMMIT)
     assert int(txn1["last_batch_id"]) == 0  # high-water mark untouched
     assert int(txn1["n"]) == rep["n_after"]
     st = spark.read.parquet(path + "/stats").collect()[0]
@@ -174,9 +172,9 @@ def test_delete_resume_completes_crashed_attempt(spark, tmp_path):
     build_ivf_index(corpus, "vec_id", "embedding", twin, n_centroids=4)
     want = delete_from_ivf_index(spark, twin, ids)
     # forge the crash state on the victim: intent on disk, rows intact
-    _write_index_json_atomic(
+    txnlog.put(
         path,
-        "del_intent.json",
+        txnlog.DELETE_INTENT,
         {
             "digest": _delete_ids_digest(ids),
             "affected": want["affected_list_ids"],
@@ -209,7 +207,7 @@ def test_delete_resume_completes_crashed_attempt(spark, tmp_path):
     assert (rep["n_deleted"], rep["n_after"]) == (
         want["n_deleted"], want["n_after"],
     )
-    assert _read_index_json(path, "del_intent.json") is None
+    assert txnlog.read(path, txnlog.DELETE_INTENT) is None
     assert read_index_stats(spark, path) == (
         want["n_after"], want["mean_after"],
     )
@@ -223,12 +221,12 @@ def test_delete_refuses_under_uncommitted_append_intent(spark, tmp_path):
     build_ivf_index(
         _mk_corpus(spark), "vec_id", "embedding", path, n_centroids=4
     )
-    _write_index_json_atomic(
-        path, "txn_intent.json", {"batch_id": 3, "touched": [0]}
+    txnlog.put(
+        path, txnlog.APPEND_INTENT, {"batch_id": 3, "touched": [0]}
     )
     with pytest.raises(RuntimeError, match="append intent"):
         delete_from_ivf_index(spark, path, [1, 2])
-    os.remove(_txn_local_path(path, "txn_intent.json"))
+    os.remove(txnlog.local_path(path, txnlog.APPEND_INTENT))
 
 
 def test_delete_rejects_object_store_paths(spark):

@@ -13,6 +13,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from spark_alchemy_spark.operators import txnlog
+
 
 def _mk_clusters(spark, dim=8, per=25):
     import random
@@ -85,7 +87,6 @@ def test_append_repairs_half_written_attempt(spark, tmp_path):
     restored from the commit record, then the re-append lands exactly
     once."""
     from spark_alchemy_spark.operators.similarity import (
-        _write_index_json_atomic,
         append_ivf_index,
         build_ivf_index,
     )
@@ -110,8 +111,8 @@ def test_append_repairs_half_written_attempt(spark, tmp_path):
         .collect()[0]["list_id"]
     )
     new_lid = 9999
-    _write_index_json_atomic(
-        path, "txn_intent.json",
+    txnlog.put(
+        path, txnlog.APPEND_INTENT,
         {"batch_id": 1, "touched": [existing_lid, new_lid]},
     )
     orphans = b1.limit(5).select(
@@ -151,7 +152,6 @@ def test_append_rejects_out_of_order_replay(spark, tmp_path):
     being processed means a second writer or a corrupt log — fail
     loud, never guess."""
     from spark_alchemy_spark.operators.similarity import (
-        _write_index_json_atomic,
         append_ivf_index,
         build_ivf_index,
     )
@@ -159,8 +159,8 @@ def test_append_rejects_out_of_order_replay(spark, tmp_path):
     df = _mk_clusters(spark)
     path = str(tmp_path / "idx")
     build_ivf_index(df, "vec_id", "embedding", path, n_centroids=4)
-    _write_index_json_atomic(
-        path, "txn_intent.json", {"batch_id": 3, "touched": []}
+    txnlog.put(
+        path, txnlog.APPEND_INTENT, {"batch_id": 3, "touched": []}
     )
     with pytest.raises(RuntimeError, match="out of order"):
         append_ivf_index(

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from spark_alchemy_spark.operators import txnlog
 from spark_alchemy_spark.operators.similarity import (
     build_ivf_index,
     make_streaming_ivf_maintainer,
@@ -139,16 +140,13 @@ def test_rebalance_refuses_uncommitted_append_intent(spark, tmp_path):
     """Round-8 ADVICE: rebalance now mirrors compact/delete — a direct
     rebalance under a crashed append's live intent would move the dead
     attempt's tagged rows out of the intent's touched partitions."""
-    from spark_alchemy_spark.operators.similarity import (
-        _write_index_json_atomic,
-    )
 
     path = str(tmp_path / "idx")
     build_ivf_index(
         _mk_corpus(spark, 0, 40), "vec_id", "embedding", path, n_centroids=4
     )
-    _write_index_json_atomic(
-        path, "txn_intent.json", {"batch_id": 0, "touched": [0]}
+    txnlog.put(
+        path, txnlog.APPEND_INTENT, {"batch_id": 0, "touched": [0]}
     )
     with pytest.raises(RuntimeError, match="uncommitted append intent"):
         rebalance_ivf_index(spark, path, id_col="vec_id")
@@ -214,12 +212,6 @@ def test_cdc_phase3_df_route_crash_resume(spark, tmp_path, monkeypatch):
     df digest from the replayed batch (the route is deterministic),
     jump straight to phase 3, resume idempotently, and land the
     marker — the df twin of the r8 list-route resume test."""
-    import os
-
-    from spark_alchemy_spark.operators.similarity import (
-        _read_index_json,
-    )
-
     path = str(tmp_path / "idx")
     build_ivf_index(
         _mk_corpus(spark, 0, 60), "vec_id", "embedding", path, n_centroids=4
@@ -231,18 +223,18 @@ def test_cdc_phase3_df_route_crash_resume(spark, tmp_path, monkeypatch):
     batch = _with_op(_mk_corpus(spark, 200, 220), "I").unionByName(
         _dels(spark, [5, 10])
     )
-    real_remove = os.remove
+    real_put = txnlog.put
 
-    def crash_remove(p):
-        if str(p).endswith("del_intent.json"):
+    def crash_remove(p, name, obj):
+        if name == txnlog.DELETE_INTENT and obj is None:
             raise RuntimeError("injected crash before intent removal")
-        real_remove(p)
+        real_put(p, name, obj)
 
-    monkeypatch.setattr(os, "remove", crash_remove)
+    monkeypatch.setattr(txnlog, "put", crash_remove)
     with pytest.raises(RuntimeError, match="injected crash"):
         maintain(batch, 0)
-    monkeypatch.setattr(os, "remove", real_remove)
-    assert _read_index_json(path, "del_intent.json") is not None  # live
+    monkeypatch.setattr(txnlog, "put", real_put)
+    assert txnlog.read(path, txnlog.DELETE_INTENT) is not None  # live
 
     maintain(batch, 0)  # the replay
     assert log[-1]["d_id_route"] == "df"
@@ -251,5 +243,5 @@ def test_cdc_phase3_df_route_crash_resume(spark, tmp_path, monkeypatch):
     ids, (n, _) = _state(spark, path)
     want = (set(range(60)) | set(range(200, 220))) - {5, 10}
     assert ids == want and n == len(want)
-    assert _read_index_json(path, "del_intent.json") is None
-    assert int(_read_index_json(path, "txn.json")["last_cdc_batch_id"]) == 0
+    assert txnlog.read(path, txnlog.DELETE_INTENT) is None
+    assert int(txnlog.read(path, txnlog.COMMIT)["last_cdc_batch_id"]) == 0

@@ -11,8 +11,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from spark_alchemy_spark.operators import txnlog
 from spark_alchemy_spark.operators.similarity import (
-    _read_index_json,
     append_ivf_index,
     build_ivf_index,
     compact_ivf_index,
@@ -62,7 +62,7 @@ def test_retrain_conserves_rows_improves_mean_keeps_txn(spark, tmp_path):
     assert n == 100 and abs(m - rep["mean_after"]) < 1e-12
     # txn CONTINUITY: the commit record survives, so a replay of the
     # already-committed batch is still a no-op skip
-    assert int(_read_index_json(path, "txn.json")["last_batch_id"]) == 0
+    assert int(txnlog.read(path, txnlog.COMMIT)["last_batch_id"]) == 0
     replay = append_ivf_index(
         _mk_corpus(spark, 100, 140, sign=-1.0), "vec_id", "embedding",
         path, batch_id=0,
@@ -73,7 +73,7 @@ def test_retrain_conserves_rows_improves_mean_keeps_txn(spark, tmp_path):
     for name in ("lists_stage", "centroids_stage", "lists_trash",
                  "centroids_trash"):
         assert not os.path.exists(os.path.join(path, name))
-    assert _read_index_json(path, "retrain_intent.json") is None
+    assert txnlog.read(path, txnlog.RETRAIN_INTENT) is None
 
 
 def test_retrain_crash_mid_swap_resumes(spark, tmp_path, monkeypatch):
@@ -114,8 +114,8 @@ def test_retrain_crash_mid_swap_resumes(spark, tmp_path, monkeypatch):
     assert rows.select("vec_id").distinct().count() == 100
     n, m = read_index_stats(spark, path)
     assert n == 100 and abs(m - rep["mean_after"]) < 1e-12
-    assert int(_read_index_json(path, "txn.json")["last_batch_id"]) == 0
-    assert _read_index_json(path, "retrain_intent.json") is None
+    assert int(txnlog.read(path, txnlog.COMMIT)["last_batch_id"]) == 0
+    assert txnlog.read(path, txnlog.RETRAIN_INTENT) is None
     for name in ("lists_stage", "centroids_stage", "lists_trash",
                  "centroids_trash"):
         assert not os.path.exists(os.path.join(path, name))
@@ -136,19 +136,16 @@ def test_retrain_crash_before_intent_leaves_index_untouched(
 
 
 def test_retrain_refuses_under_other_intents(spark, tmp_path):
-    from spark_alchemy_spark.operators.similarity import (
-        _write_index_json_atomic,
-    )
 
     path = _drifted_index(spark, tmp_path)
-    _write_index_json_atomic(
-        path, "txn_intent.json", {"batch_id": 5, "touched": [0]}
+    txnlog.put(
+        path, txnlog.APPEND_INTENT, {"batch_id": 5, "touched": [0]}
     )
     with pytest.raises(RuntimeError, match="append intent"):
         retrain_ivf_index(spark, path)
     os.remove(os.path.join(path, "txn_intent.json"))
-    _write_index_json_atomic(
-        path, "del_intent.json",
+    txnlog.put(
+        path, txnlog.DELETE_INTENT,
         {"digest": {"kind": "list", "sha": "x", "exclude_batch": None},
          "affected": [], "d_n": 0, "post_n": 100, "post_mean": 0.5,
          "list_counts": {}},
@@ -158,23 +155,20 @@ def test_retrain_refuses_under_other_intents(spark, tmp_path):
 
 
 def test_build_clears_retrain_machinery(spark, tmp_path):
-    from spark_alchemy_spark.operators.similarity import (
-        _write_index_json_atomic,
-    )
 
     path = str(tmp_path / "idx")
     build_ivf_index(
         _mk_corpus(spark, 0, 40), "vec_id", "embedding", path, n_centroids=4
     )
-    _write_index_json_atomic(
-        path, "retrain_intent.json",
+    txnlog.put(
+        path, txnlog.RETRAIN_INTENT,
         {"n": 1, "mean_assigned_cos": 0.5, "n_centroids": 4},
     )
     os.makedirs(os.path.join(path, "centroids_stage"), exist_ok=True)
     build_ivf_index(
         _mk_corpus(spark, 0, 40), "vec_id", "embedding", path, n_centroids=4
     )
-    assert _read_index_json(path, "retrain_intent.json") is None
+    assert txnlog.read(path, txnlog.RETRAIN_INTENT) is None
     assert not os.path.exists(os.path.join(path, "centroids_stage"))
 
 
@@ -243,7 +237,7 @@ def test_retrain_resume_converges_from_every_rename(
     with pytest.raises(OSError, match="injected crash"):
         retrain_ivf_index(spark, path)
     monkeypatch.setattr(os, "rename", real_rename)
-    assert _read_index_json(path, "retrain_intent.json") is not None
+    assert txnlog.read(path, txnlog.RETRAIN_INTENT) is not None
 
     rep = retrain_ivf_index(spark, path)
     assert rep["resumed"] is True and rep["n"] == 100
@@ -253,7 +247,7 @@ def test_retrain_resume_converges_from_every_rename(
     n, m = read_index_stats(spark, path)
     assert n == 100 and abs(m - rep["mean_after"]) < 1e-12
     assert spark.read.parquet(path + "/centroids").count() == 4
-    assert _read_index_json(path, "retrain_intent.json") is None
+    assert txnlog.read(path, txnlog.RETRAIN_INTENT) is None
     for name in ("lists_stage", "centroids_stage", "lists_trash",
                  "centroids_trash"):
         assert not os.path.exists(os.path.join(path, name))

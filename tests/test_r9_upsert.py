@@ -8,8 +8,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from spark_alchemy_spark.operators import txnlog
 from spark_alchemy_spark.operators.similarity import (
-    _read_index_json,
     build_ivf_index,
     read_index_stats,
     upsert_ivf_index,
@@ -140,7 +140,7 @@ def test_upsert_streaming_batchid_replay_skips(spark, tmp_path):
     assert rep1["delete_report"] is None
     assert read_index_stats(spark, path) == st
     assert spark.read.parquet(path + "/lists").count() == 40
-    assert int(_read_index_json(path, "txn.json")["last_batch_id"]) == 0
+    assert int(txnlog.read(path, txnlog.COMMIT)["last_batch_id"]) == 0
 
 
 def test_upsert_phase1_skipped_under_live_append_intent(
@@ -149,27 +149,25 @@ def test_upsert_phase1_skipped_under_live_append_intent(
     """Streaming shape, crash inside phase 2 after the append intent:
     the retry must SKIP phase 1 (the intent proves it committed) and
     let the append's replay repair run — ending exactly-once."""
-    import spark_alchemy_spark.operators.similarity as sim
-
     path = str(tmp_path / "idx")
     build_ivf_index(
         _mk_corpus(spark, 0, 40), "vec_id", "embedding", path, n_centroids=4
     )
     repl = _mk_corpus(spark, 0, 10, phase=2.5)
 
-    real_write = sim._write_index_json_atomic
+    real_write = txnlog.put
     state = {"crashed": False}
 
     def crash_on_commit(p, name, obj):
-        if name == "txn.json" and not state["crashed"]:
+        if name == txnlog.COMMIT and not state["crashed"]:
             state["crashed"] = True
             raise RuntimeError("injected crash before append commit")
         real_write(p, name, obj)
 
-    monkeypatch.setattr(sim, "_write_index_json_atomic", crash_on_commit)
+    monkeypatch.setattr(txnlog, "put", crash_on_commit)
     with pytest.raises(RuntimeError, match="injected crash"):
         upsert_ivf_index(repl, "vec_id", "embedding", path, batch_id=0)
-    monkeypatch.setattr(sim, "_write_index_json_atomic", real_write)
+    monkeypatch.setattr(txnlog, "put", real_write)
 
     rep = upsert_ivf_index(repl, "vec_id", "embedding", path, batch_id=0)
     assert rep["delete_report"] is None  # phase 1 skipped on the replay

@@ -21,7 +21,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from spark_alchemy_spark.operators.similarity import (  # noqa: E402
-    _ivf_list_files,
+    ivf_list_files,
     append_ivf_index,
     build_ivf_index,
     compact_ivf_index,
@@ -64,7 +64,7 @@ def probe_wall():
 
 
 def files():
-    counts, _ = _ivf_list_files(path)
+    counts, _ = ivf_list_files(path)
     return sum(counts.values())
 
 
