@@ -14,8 +14,10 @@ built-in functions:
   [a, null] != [null, a];  {} != {null: null};
   struct(null, a) != struct(a, null)     (FIXTURES.md F5)
 
-Design contract (used by both the JVM aggregate path and the Arrow/pandas
-per-row sketch builder in ``sketch_codec.py``):
+Design contract (used by both the JVM aggregate path and the per-row
+sketch kernel ``sketch_codec.row_images``, whose Arrow UDF the DataFrame
+API feeds these hashes and the SQL names feed ``pyxxh``'s bit-identical
+ones):
 
 * a **non-null primitive** hashes to ``xxhash64(value)`` (Spark seed 42);
 * a **null nested inside a collection/struct** hashes to ``NULL_HASH``

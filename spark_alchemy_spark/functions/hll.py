@@ -9,10 +9,10 @@ codegen'd Catalyst operators:
   ===========================  =====================================
   reference SQL name           engine implementation
   ===========================  =====================================
-  hll_init                     Arrow pandas-UDF sketch-byte writer
-                               (no shuffle; sketch_codec.py) over the
-                               JVM cardinality hash
-  hll_init_collection          same, per collection element
+  hll_init                     Arrow UDF over the one per-row sketch
+                               kernel (sketch_codec.row_images; no
+                               shuffle) fed the JVM cardinality hash
+  hll_init_collection          same kernel, per collection element
   hll_init_agg                 hll_sketch_agg  (+ null-algebra guard)
   hll_init_collection_agg      hll_union_agg over per-row collection
                                sketches
@@ -20,7 +20,8 @@ codegen'd Catalyst operators:
   hll_row_merge                hll_union folded with null-skip
   hll_cardinality              hll_sketch_estimate
   hll_intersect_cardinality    inclusion-exclusion composition
-  hll_convert                  pure-Python byte transcoder (agkn.py)
+  hll_convert                  Arrow UDF over one (from, to) table of
+                               byte transcoders (agkn.py, strm.py)
   ===========================  =====================================
 
 Null algebra reproduced from the reference:
@@ -41,17 +42,22 @@ from __future__ import annotations
 import functools
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa  # module-level: arrow_udf type hints resolve here
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
 
 from ..conf import (
     DEFAULT_RELATIVE_SD,
     precision_from_error,
+    resolve_backend,
 )
-from .hashing import cardinality_hash, element_hashes
+from . import agkn, strm
+from .hashing import BINARY_SEED, cardinality_hash, element_hashes
+from .pyxxh import hash_arrow_values, xxh64_long
+from .sketch_codec import row_images, sketch_bytes_from_hashes_vec, union_images
 
 __all__ = [
     "hll_init",
@@ -98,42 +104,30 @@ def _lg_k(relative_sd: float | None) -> int:
 
 
 @functools.lru_cache(maxsize=None)
-def _init_udf(lg_k: int):
-    """pandas UDF: nullable int64 hash -> serialized single-value sketch."""
-    from .sketch_codec import coupons_for_longs, serialize_coupons
+def _init_udf(lg_k: int, collection: bool, raw: bool):
+    """The per-row init Arrow UDF of both surfaces: one image per row of
+    the row's value, or with ``collection`` of its non-null elements.
+    The DataFrame API feeds it the JVM ``cardinality_hash`` /
+    ``element_hashes`` BIGINTs; the SQL names feed it ``raw`` values,
+    hashed here by :mod:`.pyxxh` bit-identically.  NULL in -> NULL out."""
 
-    @F.pandas_udf(T.BinaryType())
-    def init(hashes: pd.Series) -> pd.Series:
-        mask = hashes.notna()
-        out = pd.Series([None] * len(hashes), dtype=object)
-        if mask.any():
-            vals = hashes[mask].to_numpy(dtype=np.int64)
-            coupons = coupons_for_longs(vals)
-            out[mask] = [serialize_coupons((int(c),), lg_k) for c in coupons]
-        return out
+    @arrow_udf("binary")
+    def init(v: pa.Array) -> pa.Array:
+        v = v.combine_chunks() if isinstance(v, pa.ChunkedArray) else v
+        flat = pc.list_flatten(v) if collection else v
+        rows = pc.list_parent_indices(v) if collection else pa.array(np.arange(len(v)))
+        if flat.null_count:
+            valid = pc.is_valid(flat)
+            flat, rows = flat.filter(valid), rows.filter(valid)
+        hashes = (
+            hash_arrow_values(flat, xxh64_long(BINARY_SEED))
+            if raw
+            else flat.to_numpy(zero_copy_only=False)
+        )
+        nulls = v.is_null().to_numpy(zero_copy_only=False)
+        return row_images(hashes, rows.to_numpy(zero_copy_only=False), len(v), nulls, lg_k)
 
     return init
-
-
-@functools.lru_cache(maxsize=None)
-def _init_collection_udf(lg_k: int):
-    """pandas UDF: array<int64> of element hashes -> multi-value sketch."""
-    from .sketch_codec import coupons_for_longs, serialize_coupons
-
-    @F.pandas_udf(T.BinaryType())
-    def init_collection(hash_arrays: pd.Series) -> pd.Series:
-        out = []
-        for arr in hash_arrays:
-            if arr is None:
-                out.append(None)
-            elif len(arr) == 0:
-                out.append(serialize_coupons((), lg_k))
-            else:
-                coupons = coupons_for_longs(np.asarray(arr, dtype=np.int64))
-                out.append(serialize_coupons(coupons.tolist(), lg_k))
-        return pd.Series(out, dtype=object)
-
-    return init_collection
 
 
 def hll_init(col, relative_sd: float | None = None, dtype: T.DataType | None = None) -> Column:
@@ -142,12 +136,7 @@ def hll_init(col, relative_sd: float | None = None, dtype: T.DataType | None = N
     reference: HyperLogLogInitSimple, HLLFunctions.scala:192-218.
     ``dtype`` is required only for array/map/struct inputs.
     """
-    c = _col(col)
-    lg_k = _lg_k(relative_sd)
-    h = cardinality_hash(c, dtype)
-    return F.when(h.isNull(), F.lit(None).cast("binary")).otherwise(
-        _init_udf(lg_k)(F.coalesce(h, F.lit(0).cast("long")))
-    )
+    return _init_udf(_lg_k(relative_sd), False, False)(cardinality_hash(col, dtype))
 
 
 def hll_init_collection(
@@ -160,12 +149,7 @@ def hll_init_collection(
     reference: HyperLogLogInitCollection, HLLFunctions.scala:294-321,
     offer logic :103-124.
     """
-    c = _col(col)
-    lg_k = _lg_k(relative_sd)
-    hashes = element_hashes(c, dtype)
-    return F.when(c.isNull(), F.lit(None).cast("binary")).otherwise(
-        _init_collection_udf(lg_k)(F.coalesce(hashes, F.array().cast("array<bigint>")))
-    )
+    return _init_udf(_lg_k(relative_sd), True, False)(element_hashes(col, dtype))
 
 
 # ---------------------------------------------------------------------------
@@ -273,25 +257,59 @@ def hll_convert(col, impl_from: str = "DS", impl_to: str = "AGKN") -> Column:
     reading stream-lib bytes).  Converted sketches estimate the same
     cardinality but must never be MERGED with natively-built sketches
     of the other system (different input hashes —
-    HLLFunctions.scala:628-630).
+    HLLFunctions.scala:628-630).  Format names are case-insensitive and
+    ``StreamLib`` means ``STRM``, as for the SQL ``hll_convert``.
     """
-    f, t = impl_from.upper(), impl_to.upper()
-    if (f, t) == ("DS", "AGKN"):
-        from .agkn import ds_to_agkn_udf
+    return _convert_udf(impl_from, impl_to)(_col(col))
 
-        return ds_to_agkn_udf()(_col(col))
-    if (f, t) == ("STRM", "AGKN"):
-        from .strm import strm_to_agkn_udf
 
-        return strm_to_agkn_udf()(_col(col))
-    if (f, t) == ("DS", "STRM"):
-        from .strm import ds_to_strm_udf
+#: The one conversion table: normalized (from, to) format names -> byte
+#: transcoder.  Both ``hll_convert`` surfaces resolve through it.
+_CONVERSIONS = {
+    ("DS", "AGKN"): agkn.ds_to_agkn,
+    ("STRM", "AGKN"): strm.strm_to_agkn,
+    ("DS", "STRM"): strm.ds_to_strm,
+}
 
-        return ds_to_strm_udf()(_col(col))
-    raise ValueError(
-        f"Conversion from {impl_from!r} to {impl_to!r} is not supported "
-        "(DS -> AGKN, STRM -> AGKN, DS -> STRM)."
-    )
+
+@functools.lru_cache(maxsize=None)
+def _converter(impl_from: str | None, impl_to: str | None):
+    key = (resolve_backend(impl_from), resolve_backend(impl_to))
+    if key not in _CONVERSIONS:
+        raise ValueError(
+            f"Conversion from {impl_from!r} to {impl_to!r} is not supported "
+            "(DS -> AGKN, STRM -> AGKN, DS -> STRM)."
+        )
+    return _CONVERSIONS[key]
+
+
+@functools.lru_cache(maxsize=None)
+def _convert_udf(impl_from: str, impl_to: str):
+    """Arrow UDF converting sketch bytes for one (from, to) pair; raises
+    at once on an unsupported pair.  Its one sketch argument lets Spark
+    fuse chained conversions into one Python stage."""
+    convert = _converter(impl_from, impl_to)
+
+    @arrow_udf("binary")
+    def udf(sk: pa.Array) -> pa.Array:
+        return pa.array([None if b is None else convert(b) for b in sk.to_pylist()], type=pa.binary())
+
+    return udf
+
+
+@functools.lru_cache(maxsize=None)
+def agkn_cardinality_udf():
+    """Arrow UDF: AgKn FULL bytes -> rounded estimate, NULL -> NULL
+    (mirrors postgresql-hll's ``hll_cardinality``, which the reference's
+    interop test reads back from Postgres — PostgresInteropTest.scala:88-98).
+    ``register`` exposes it as the SQL ``agkn_cardinality``."""
+
+    @arrow_udf("bigint")
+    def estimate(images: pa.Array) -> pa.Array:
+        out = [None if b is None else round(agkn.agkn_cardinality(b)) for b in images.to_pylist()]
+        return pa.array(out, type=pa.int64())
+
+    return estimate
 
 
 # ---------------------------------------------------------------------------
@@ -349,6 +367,12 @@ def register(spark) -> None:
     * the init/aggregate/convert forms are Arrow UDFs / UDAFs hashing
       with :mod:`pyxxh` (bit-identical to the JVM ``cardinality_hash``),
       so SQL-built sketches MERGE correctly with DataFrame-built ones.
+      ``hll_init`` / ``hll_init_collection`` are the DataFrame API's own
+      per-row UDF (one :func:`.sketch_codec.row_images` kernel) fed raw
+      values instead of JVM hashes, so both surfaces write byte-identical
+      images; ``hll_convert`` resolves per row through the DataFrame
+      API's conversion table, and ``agkn_cardinality`` is the very UDF
+      the battery applies to DataFrame columns.
       Note the UDAF forms materialize each group's values (no partial
       aggregation — a Spark grouped-agg UDF limitation); they are the
       SQL *compatibility* surface.  The DataFrame API
@@ -372,25 +396,6 @@ def register(spark) -> None:
         "RETURNS BINARY RETURN CASE WHEN a IS NULL THEN b WHEN b IS NULL THEN a "
         "ELSE hll_union(a, b, true) END"
     )
-    # Scalar per-row init over a pre-hashed BIGINT (pair with
-    # alchemy_hash(...) below for arbitrary primitives).
-    spark.udf.register("hll_init_hashed", _init_udf(_lg_k(None)))
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION alchemy_hash(x BIGINT) "
-        "RETURNS BIGINT RETURN CASE WHEN x IS NULL THEN CAST(NULL AS BIGINT) "
-        "ELSE xxhash64(x) END"
-    )
-
-    from pyspark.sql.functions import arrow_udf
-
-    from .hashing import BINARY_SEED
-    from .pyxxh import hash_arrow_values, xxh64_long
-    from .sketch_codec import (
-        serialize_coupons,
-        sketch_bytes_from_hashes_vec,
-        union_images,
-    )
-
     lg_k = _lg_k(None)  # error resolution at registration time
     bin_seed = xxh64_long(BINARY_SEED)
 
@@ -417,122 +422,15 @@ def register(spark) -> None:
         return union_images(v.to_pylist())
 
     @arrow_udf("binary")
-    def _sql_init(v: pa.Array) -> pa.Array:
-        import struct
-
-        from .sketch_codec import coupons_for_longs, serialize_coupons
-
-        # vectorized hash + coupon for the whole batch; per-row images
-        # share one constant single-coupon LIST preamble + zero tail
-        hashes = hash_arrow_values(v, bin_seed)
-        coupons = coupons_for_longs(hashes)
-        proto = serialize_coupons((0,), lg_k)
-        head, tail = proto[:8], proto[12:]
-        images = iter(
-            head + struct.pack("<i", int(c) - (1 << 32) if c >= (1 << 31) else int(c)) + tail
-            for c in coupons
-        )
-        out = [
-            None if is_null else next(images)
-            for is_null in pa.compute.is_null(v).to_pylist()
-        ]
-        return pa.array(out, type=pa.binary())
-
-    @arrow_udf("binary")
-    def _sql_init_collection(v: pa.Array) -> pa.Array:
-        # vectorized per-row sketches (r11, guide §4.2): hash EVERY
-        # element of the batch in one pass, group coupons per row with
-        # numpy, serialize one image per row.  The old form re-entered
-        # pa.array + the hash kernel once PER ROW (~2.1s over sf0.1
-        # documents vs ~0.3s here).  Byte-identical: per-row coupons
-        # come out sorted-unique exactly like np.unique in
-        # sketch_bytes_from_hashes_vec, and the dense-promotion branch
-        # is preserved (pinned by test_r11_kernels).
-        import numpy as np
-        import pyarrow.compute as pc
-
-        from .sketch_codec import _KEY_BITS, _KEY_MASK, coupons_for_longs, serialize_dense
-
-        v = v.combine_chunks() if isinstance(v, pa.ChunkedArray) else v
-        n = len(v)
-        flat = pc.list_flatten(v)  # non-null lists' elements, in order
-        rows_idx = pc.list_parent_indices(v)
-        if flat.null_count:  # null ELEMENTS are skipped (hash-layer rule)
-            valid = pc.is_valid(flat)
-            flat = flat.filter(valid)
-            rows_idx = rows_idx.filter(valid)
-        hashes = hash_arrow_values(flat, bin_seed)
-        rows = rows_idx.to_numpy(zero_copy_only=False)
-        coupons = coupons_for_longs(hashes)
-        order = np.lexsort((coupons, rows))
-        r, c = rows[order], coupons[order]
-        keep = np.ones(len(r), dtype=bool)
-        keep[1:] = (r[1:] != r[:-1]) | (c[1:] != c[:-1])
-        r, c = r[keep], c[keep]
-        bounds = np.searchsorted(r, np.arange(n + 1))
-        empty = serialize_coupons((), lg_k)
-        m = 1 << lg_k
-        null_mask = pc.is_null(v).to_pylist()
-        out = []
-        for i in range(n):
-            if null_mask[i]:
-                out.append(None)
-                continue
-            cs = c[bounds[i] : bounds[i + 1]]
-            if len(cs) == 0:
-                out.append(empty)
-            elif len(cs) * 4 > m:
-                regs = np.zeros(m, dtype=np.uint8)
-                slots = (cs & _KEY_MASK) & (m - 1)
-                vals = (cs >> _KEY_BITS).astype(np.uint8)
-                np.maximum.at(regs, slots, vals)
-                out.append(serialize_dense(lg_k, regs))
-            else:
-                out.append(serialize_coupons(cs.tolist(), lg_k))
-        return pa.array(out, type=pa.binary())
-
-    @arrow_udf("binary")
     def _sql_convert(sk: pa.Array, impl_from: pa.Array, impl_to: pa.Array) -> pa.Array:
-        from ..conf import resolve_backend
-        from .agkn import ds_to_agkn
-        from .strm import ds_to_strm, strm_to_agkn
-
-        pairs = {
-            ("DS", "AGKN"): ds_to_agkn,
-            ("STRM", "AGKN"): strm_to_agkn,
-            ("DS", "STRM"): ds_to_strm,
-        }
-        out = []
-        for b, f, t in zip(
-            sk.to_pylist(), impl_from.to_pylist(), impl_to.to_pylist()
-        ):
-            key = (
-                resolve_backend(None, f, for_conversion=True),
-                resolve_backend(None, t, for_conversion=True),
-            )
-            if key not in pairs:
-                raise ValueError(f"Conversion {f!r} -> {t!r} is not supported")
-            out.append(pairs[key](b))
+        names = zip(impl_from.to_pylist(), impl_to.to_pylist())
+        out = [None if b is None else _converter(f, t)(b) for b, (f, t) in zip(sk.to_pylist(), names)]
         return pa.array(out, type=pa.binary())
-
-    @arrow_udf("bigint")
-    def _sql_agkn_cardinality(images: pa.Array) -> pa.Array:
-        from .agkn import agkn_cardinality
-
-        return pa.array(
-            [
-                None if b is None else round(agkn_cardinality(bytes(b)))
-                for b in images.to_pylist()
-            ],
-            type=pa.int64(),
-        )
 
     spark.udf.register("hll_init_agg", _sql_init_agg)
     spark.udf.register("hll_init_collection_agg", _sql_init_collection_agg)
     spark.udf.register("hll_merge", _sql_merge)
-    spark.udf.register("hll_init", _sql_init)
-    spark.udf.register("hll_init_collection", _sql_init_collection)
+    spark.udf.register("hll_init", _init_udf(lg_k, False, True))
+    spark.udf.register("hll_init_collection", _init_udf(lg_k, True, True))
     spark.udf.register("hll_convert", _sql_convert)
-    # estimator over converted postgresql-hll bytes (what the reference's
-    # interop test reads back from Postgres, PostgresInteropTest.scala:88-98)
-    spark.udf.register("agkn_cardinality", _sql_agkn_cardinality)
+    spark.udf.register("agkn_cardinality", agkn_cardinality_udf())

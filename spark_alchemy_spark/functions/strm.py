@@ -41,7 +41,9 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
+
+from .agkn import agkn_from_registers
+from .sketch_codec import ds_registers
 
 _STRM_VERSION = 2
 _FMT_NORMAL = 0
@@ -142,53 +144,19 @@ def strm_from_registers(p: int, registers: np.ndarray) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# Column-level conversions
+# Conversions (register copies)
 # ---------------------------------------------------------------------------
 
 
-def strm_to_agkn(data: bytes | None, regwidth: int = 6) -> bytes | None:
-    """STRM NORMAL image -> AgKn v1 FULL image (register copy), the
-    direct analogue of the reference's STRM -> AGKN conversion."""
-    from .agkn import agkn_from_registers
-
-    if data is None:
-        return None
-    p, regs = strm_registers(bytes(data))
-    return agkn_from_registers(p, regs, regwidth)
+def strm_to_agkn(data: bytes) -> bytes:
+    """STRM NORMAL image -> AgKn v1 FULL image, the direct analogue of
+    the reference's STRM -> AGKN conversion."""
+    return agkn_from_registers(*strm_registers(data))
 
 
-def ds_to_strm(data: bytes | None) -> bytes | None:
-    """Datasketches image -> STRM NORMAL image (register copy)."""
-    from .agkn import ds_registers
-
-    if data is None:
-        return None
-    lg_k, regs = ds_registers(bytes(data))
-    return strm_from_registers(lg_k, regs)
-
-
-def strm_to_agkn_udf(regwidth: int = 6):
-    """Arrow-batched pandas UDF: StreamLib bytes -> AgKn v1 FULL bytes."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("binary")
-    def convert(sketches: pd.Series) -> pd.Series:
-        return pd.Series(
-            [strm_to_agkn(s, regwidth) for s in sketches], dtype=object
-        )
-
-    return convert
-
-
-def ds_to_strm_udf():
-    """Arrow-batched pandas UDF: DS sketch bytes -> StreamLib bytes."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("binary")
-    def convert(sketches: pd.Series) -> pd.Series:
-        return pd.Series([ds_to_strm(s) for s in sketches], dtype=object)
-
-    return convert
+def ds_to_strm(data: bytes) -> bytes:
+    """Datasketches image -> STRM NORMAL image."""
+    return strm_from_registers(*ds_registers(data))
 
 
 def strm_cardinality(data: bytes) -> float:

@@ -14,13 +14,14 @@ from pyspark.sql import functions as F
 from spark_alchemy_spark.functions import hll
 from spark_alchemy_spark.functions.agkn import (
     agkn_cardinality,
-    agkn_cardinality_udf,
     agkn_from_registers,
     agkn_registers,
-    ds_registers,
     ds_to_agkn,
 )
-from spark_alchemy_spark.functions.sketch_codec import sketch_bytes_from_hashes
+from spark_alchemy_spark.functions.sketch_codec import (
+    ds_registers,
+    sketch_bytes_from_hashes_vec,
+)
 
 
 def test_conversion_accuracy_10k(spark):
@@ -49,7 +50,7 @@ def test_register_roundtrip(spark, n, lgk):
             df.agg(F.hll_sketch_agg("h", F.lit(lgk)).alias("sk")).collect()[0]["sk"]
         )
     else:
-        sk = sketch_bytes_from_hashes(np.array([], dtype=np.int64), lgk)
+        sk = sketch_bytes_from_hashes_vec(np.array([], dtype=np.int64), lgk)
     lg, regs = ds_registers(sk)
     log2m, regwidth, back = agkn_registers(ds_to_agkn(sk))
     assert (log2m, regwidth) == (lg, 6)
@@ -60,7 +61,7 @@ def test_python_list_set_images_convert():
     """Our per-row writer's LIST and SET images convert too (hll_init
     output is convertible without touching the JVM)."""
     for n in (0, 3, 20, 500):
-        b = sketch_bytes_from_hashes(np.arange(n, dtype=np.int64) * 2654435761, 14)
+        b = sketch_bytes_from_hashes_vec(np.arange(n, dtype=np.int64) * 2654435761, 14)
         est = agkn_cardinality(ds_to_agkn(b))
         assert abs(est - n) <= max(2, 0.02 * n)
 
@@ -76,7 +77,7 @@ def test_hll_convert_column(spark):
         .agg(hll.hll_init_agg("v", 0.0015).alias("sk"))
         .select(
             "g",
-            agkn_cardinality_udf()(hll.hll_convert("sk", "DS", "AGKN")).alias("n"),
+            hll.agkn_cardinality_udf()(hll.hll_convert("sk", "DS", "AGKN")).alias("n"),
         )
         .orderBy("g")
         .collect()

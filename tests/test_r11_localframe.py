@@ -67,6 +67,28 @@ def test_local_frame_falls_back_on_unsafe_types(spark):
     assert str(new.collect()) == str(spark.createDataFrame(rows, ddl).collect())
 
 
+def test_local_frame_reads_dict_rows_by_name(spark):
+    rows = [{"b": "x", "a": 1}, {"a": 2, "b": None}, {"b": "z"}]
+    ddl = "a long, b string"
+    old = spark.createDataFrame(rows, ddl)
+    new = local_frame(spark, rows, ddl)
+    assert old.schema == new.schema
+    assert str(old.collect()) == str(new.collect())
+
+
+def test_local_frame_keeps_repeated_field_names(spark):
+    """A JSON object would collapse repeated names to one value; such
+    schemas (top level or nested) must fall back to createDataFrame."""
+    for rows, ddl in [
+        ([(1, 2)], "a long, a long"),
+        ([(1, (2, 3))], "k long, s struct<x: long, x: long>"),
+    ]:
+        old = spark.createDataFrame(rows, ddl)
+        new = local_frame(spark, rows, ddl)
+        assert old.schema == new.schema
+        assert str(old.collect()) == str(new.collect())
+
+
 @pytest.fixture(scope="module")
 def fused_idx(spark):
     corpus = spark.createDataFrame(

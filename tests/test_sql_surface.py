@@ -87,6 +87,120 @@ def test_row_merge_intersect_convert_names(registered):
     assert row["c_agkn"] == row["c_chain"]  # identical registers both routes
 
 
+@pytest.mark.parametrize("lg_k", [4, 9, 14])
+def test_row_images_match_per_row_reference(lg_k):
+    """The per-row kernel's byte block against a per-row loop: LIST images
+    packed field by field from the serialization spec, SET images from
+    serialize_coupons, dense ones from the registers (the three writers
+    the JVM round-trip tests read back)."""
+    import struct
+
+    from spark_alchemy_spark.functions.sketch_codec import (
+        coupons_for_longs,
+        coupons_to_registers,
+        row_images,
+        serialize_coupons,
+        serialize_dense,
+    )
+
+    rng = np.random.default_rng(lg_k)
+    sizes = rng.choice([0, 1, 2, 5, 7, 8, 30, 700], size=400)
+    nulls = rng.random(400) < 0.1
+    hashes = rng.integers(-(2**63), 2**63 - 1, int(sizes.sum()), dtype=np.int64)
+    hashes[::5] = 42  # repeated values within and across rows
+    rows = np.repeat(np.arange(400), sizes)
+    expected = []
+    for i in range(400):
+        c = np.unique(coupons_for_longs(hashes[rows == i]))
+        if nulls[i]:
+            expected.append(None)
+        elif len(c) * 4 > 1 << lg_k:
+            expected.append(serialize_dense(lg_k, coupons_to_registers(c, lg_k)))
+        elif len(c) > 7:
+            expected.append(serialize_coupons(c.tolist(), lg_k))
+        else:
+            head = bytes([2, 1, 7, lg_k, 3, 0x04 if len(c) == 0 else 0, len(c), 2 << 2])
+            expected.append(head + struct.pack("<8I", *c.tolist(), *[0] * (8 - len(c))))
+    assert row_images(hashes, rows, 400, nulls, lg_k).to_pylist() == expected
+
+
+@pytest.mark.parametrize(
+    "fn,col", [("hll_init", "x"), ("hll_init", "s"), ("hll_init_collection", "arr")]
+)
+def test_dataframe_and_sql_per_row_images_identical(registered, fn, col):
+    """Both surfaces run the one per-row kernel (sketch_codec.row_images):
+    the DataFrame API over JVM hashes, SQL over pyxxh hashes of the raw
+    values.  Their images must be byte-identical, across several Arrow
+    batches, for NULL rows, empty arrays, null elements and a row with
+    more than m/4 distinct elements (a dense image)."""
+    from pyspark.sql import types as T
+
+    spark = registered
+    rows = []
+    for i in range(60):
+        arr = [[], [None], None, [i, None, i + 1, i]][i % 4] if i % 3 else [i % 7] * 3
+        rows.append((i, None if i % 5 == 0 else i * 7919, None if i % 6 == 0 else f"v{i % 9}", arr))
+    rows.append((60, 1, "a", list(range(1000))))  # > m/4 at the default lgK 9
+    df = spark.createDataFrame(rows, "i long, x long, s string, arr array<bigint>").coalesce(1)
+    df.createOrReplaceTempView("tperrow")
+    dtype = T.ArrayType(T.LongType()) if col == "arr" else None
+    # lgK 9 (relative SD 0.05), several Arrow batches per partition
+    conf = {"spark.alchemy.hll.relativeSD": "0.05", "spark.sql.execution.arrow.maxRecordsPerBatch": "7"}
+    before = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        hll.register(spark)  # SQL names resolve lgK at registration
+        by_df = df.select("i", getattr(hll, fn)(col, dtype=dtype).alias("sk")).collect()
+        by_sql = spark.sql(f"SELECT i, {fn}({col}) AS sk FROM tperrow").collect()
+    finally:
+        for k, v in before.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    images = {r["i"]: r["sk"] for r in by_df}
+    assert images == {r["i"]: r["sk"] for r in by_sql}
+    assert images[{"x": 5, "s": 6, "arr": 2}[col]] is None
+    if col == "arr":
+        from spark_alchemy_spark.functions.sketch_codec import serialize_coupons
+
+        # [None] and [] -> the empty sketch; 1000 distinct -> dense HLL_8
+        assert images[1] == images[4] == serialize_coupons((), 9)
+        assert len(images[60]) == 40 + (1 << 9)
+
+
+@pytest.mark.parametrize(
+    "impl_from,impl_to,supported",
+    [
+        ("DS", "AGKN", True),
+        ("ds", "strm", True),
+        ("DS", "StreamLib", True),
+        ("StreamLib", "AGKN", True),
+        ("strm", "agkn", True),
+        ("AGKN", "DS", False),
+        ("STRM", "DS", False),
+        ("DS", "DS", False),
+        ("DS", "HLLPP", False),
+    ],
+)
+def test_hll_convert_names_agree_across_surfaces(registered, impl_from, impl_to, supported):
+    """The DataFrame and SQL ``hll_convert`` share one name normalizer and
+    one conversion table: the same names convert to the same bytes, and
+    the same pairs are rejected."""
+    spark = registered
+    sk = spark.range(300).agg(hll.hll_init_agg("id").alias("sk"))
+    if impl_from.upper() != "DS":
+        sk = sk.select(hll.hll_convert("sk", "DS", "STRM").alias("sk"))
+    sk.createOrReplaceTempView("tnames")
+    sql = f"SELECT hll_convert(sk, '{impl_from}', '{impl_to}') AS c FROM tnames"
+    if supported:
+        by_df = sk.select(hll.hll_convert("sk", impl_from, impl_to).alias("c")).head()["c"]
+        assert by_df == spark.sql(sql).head()["c"]
+    else:
+        with pytest.raises(ValueError, match="not supported|Unknown sketch byte format"):
+            hll.hll_convert("sk", impl_from, impl_to)
+        with pytest.raises(Exception, match="not supported|Unknown sketch byte format"):
+            spark.sql(sql).collect()
+
+
 def test_string_binary_type_tag(registered):
     """'a' and CAST('a' AS BINARY) must sketch as TWO distinct values
     (reference CardinalityHashFunction.scala:24-25) — via SQL names and

@@ -16,7 +16,8 @@ import pytest
 
 from spark_alchemy_spark.conf import resolve_backend
 from spark_alchemy_spark.functions import hll
-from spark_alchemy_spark.functions.agkn import agkn_cardinality, ds_registers
+from spark_alchemy_spark.functions.agkn import agkn_cardinality
+from spark_alchemy_spark.functions.sketch_codec import ds_registers
 from spark_alchemy_spark.functions.strm import (
     strm_cardinality,
     strm_from_registers,
@@ -125,8 +126,6 @@ def test_sparse_and_bad_images_rejected():
 
 
 def test_resolve_backend_conversion_formats(spark):
-    assert resolve_backend(None, "STRM", for_conversion=True) == "STRM"
-    assert resolve_backend(None, "StreamLib", for_conversion=True) == "STRM"
-    assert resolve_backend(None, "AGKN", for_conversion=True) == "AGKN"
-    with pytest.raises(ValueError, match="not an execution backend"):
-        resolve_backend(None, "STRM")
+    assert resolve_backend("STRM") == "STRM"
+    assert resolve_backend("StreamLib") == "STRM"
+    assert resolve_backend("AGKN") == "AGKN"
